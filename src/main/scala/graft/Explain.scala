@@ -16,7 +16,26 @@ import org.apache.spark.sql.SparkSession
   * eagerly and returns the post-collect verification join).
   */
 object Explain {
+  /** `(cut, queryNames)` of a command line. Any flag but `--cut` is a
+    * usage error: a mistyped flag would otherwise dump the wrong plan
+    * shape without a word.
+    */
+  def parseArgs(args: Seq[String]): (Boolean, Seq[String]) = {
+    val (flags, names) = args.partition(_.startsWith("--"))
+    val unknown = flags.filterNot(_ == "--cut")
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown flag(s): ${unknown.mkString(" ")}")
+    (flags.nonEmpty, names)
+  }
+
   def main(args: Array[String]): Unit = {
+    val (cut, given) =
+      try parseArgs(args.toSeq)
+      catch {
+        case e: IllegalArgumentException =>
+          System.err.println(s"${e.getMessage}\nusage: graft.Explain [--cut] [queryName ...]")
+          sys.exit(2)
+      }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -29,14 +48,13 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val (flags, given) = args.toSeq.partition(_.startsWith("--"))
     // Plan-audit mode: without this, lineage-cut operators dump as an
     // opaque `Scan ExistingRDD ... localCheckpoint` (the r17 minhash
     // evidence defect). Keeping lineage here shows the REAL operator
     // tree — the executed bench plan differs only by the cut points
     // (pass --cut to see exactly those). Audit-only knob; Bench/Verify
     // never set it.
-    if (!flags.contains("--cut"))
+    if (!cut)
       spark.conf.set(graft.util.Lineage.KeepKey, "true")
     val names =
       if (given.nonEmpty) given

@@ -888,7 +888,11 @@ object Pipeline {
             if (reports.has("freqK")) reports.get("freqK").asInt() else 10)
           .write.mode("overwrite").parquet(s"$repDir/freq")
     }
-    (obsIn.get("rows").asInstanceOf[Long], obsOut.get("rows").asInstanceOf[Long])
+    // an empty input runs no task, so an observation may report no
+    // row count at all: that reads as 0 rows, not as a missing key
+    def rows(o: org.apache.spark.sql.Observation): Long =
+      o.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+    (rows(obsIn), rows(obsOut))
   }
 
   /** CLI: `runMain graft.Pipeline -cfg /path/pipeline.json` (also

@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Fs, Hashing}
+import graft.util.Fs
 
 /** Hash-bucket partition layout for incremental sinks.
   *
@@ -15,9 +15,15 @@ import graft.util.{Fs, Hashing}
   * (partition-pruned scan) and the write swaps only those partition
   * directories; untouched partitions keep their exact files.
   *
-  * The SAME bucket family drives delete detection
-  * ([[RangeHashDiff.hashBucketDiff]]), so a divergent diff bucket IS a
-  * storage partition — reload maps 1:1 onto a partition overwrite.
+  * The SAME bucket family drives change detection, so a divergent
+  * bucket IS a storage partition. The Replicator's poll is one
+  * reconcile per table: a per-bucket summary of source against target
+  * ([[RangeHashDiff.bucketSummary]]: key count, key-hash sum, rows past
+  * the watermark) flags the buckets that differ, and ONE
+  * [[overwriteBuckets]] rewrites exactly those partitions from the
+  * source rows — no merge, no target read. [[upsertBuckets]] (merge a
+  * change batch into its buckets) serves the streaming fold and
+  * update-only replication.
   *
   * On a transactional table format this is `MERGE INTO`; with plain
   * parquet the per-partition swap gives the same pruned-I/O shape with
@@ -47,8 +53,7 @@ object BucketedLayout {
     * pk-tuple encoding, mod nBuckets — any key shape, skew-free.
     */
   def bucketExpr(pkCols: Seq[String], nBuckets: Int): Column =
-    pmod(Hashing.portableHash64(RangeHashDiff.pkTuple(pkCols)), lit(nBuckets.toLong))
-      .cast("int")
+    RangeHashDiff.hashBucket(pkCols, nBuckets).cast("int")
 
   /** Full (re)write: stage the whole table partitioned by bucket, then
     * swap. One task per bucket (repartition on the layout column) so
@@ -116,9 +121,9 @@ object BucketedLayout {
 
   /** Partition-pruned upsert of a PK-unique change batch into a
     * bucketed target: read ONLY the partitions the batch's keys hash
-    * into, merge, swap exactly those back. The single entry point for
-    * both the Replicator's incremental cycle and the streaming
-    * micro-batch merge — O(batch) I/O, not O(target).
+    * into, merge, swap exactly those back. The entry point for the
+    * streaming micro-batch merge and for the Replicator's incremental
+    * cycle when delete sync is off — O(batch) I/O, not O(target).
     *
     * `batch` should be materialized (checkpointed/persisted) by the
     * caller if it derives from a live source: it feeds the affected-
@@ -193,9 +198,9 @@ object BucketedLayout {
 }
 
 /** Parquet store whose tables are laid out by [[BucketedLayout]]. The
-  * Replicator detects this store type and switches to partition-pruned
-  * incremental merges and bucket-aligned delete sync; `read` hides the
-  * layout column so the logical table is unchanged.
+  * Replicator detects this store type and switches to the one-pass
+  * bucket reconcile (partition-pruned merges when delete sync is off);
+  * `read` hides the layout column so the logical table is unchanged.
   */
 class BucketedParquetStore(spark: SparkSession, dir: String, val nBuckets: Int)
     extends ParquetStore(spark, dir) {

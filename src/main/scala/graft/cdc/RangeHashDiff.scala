@@ -27,6 +27,13 @@ import graft.util.Hashing
   */
 object RangeHashDiff {
 
+  /** Value-range bucket of a single integer key: `pk div chunkSize`.
+    * Integer `div`, not `/`: Column./ is IEEE double division, which
+    * loses exactness for keys beyond 2^53 — fatal at 100 TB key ranges.
+    */
+  def rangeBucket(pkCol: String, chunkSize: Long): Column =
+    expr(s"cast(`$pkCol` as bigint) div ${chunkSize}L")
+
   /** Per-bucket hash of a table's primary keys.
     * Output: (bucket, n_keys, key_hash[string]).
     * For non-negative pks bucket b covers [b*chunkSize, (b+1)*chunkSize);
@@ -38,10 +45,8 @@ object RangeHashDiff {
   def bucketHashes(df: DataFrame, pkCol: String, chunkSize: Long,
                    ordered: Boolean = false, filter: Column = lit(true)): DataFrame = {
     val pk = col(pkCol)
-    // integer `div`, not `/`: Column./ is IEEE double division, which
-    // loses exactness for keys beyond 2^53 — fatal at 100 TB key ranges
     val keyed = df.filter(filter)
-      .select(expr(s"cast(`$pkCol` as bigint) div ${chunkSize}L").as("bucket"), pk.as("pk"))
+      .select(rangeBucket(pkCol, chunkSize).as("bucket"), pk.as("pk"))
     if (ordered) {
       keyed.groupBy("bucket").agg(
         count(lit(1)).as("n_keys"),
@@ -80,19 +85,11 @@ object RangeHashDiff {
     */
   def changedRangeRows(source: DataFrame, diff: DataFrame, pkCol: String,
                        chunkSize: Long): DataFrame = {
-    val bucketed = source.withColumn("bucket",
-      expr(s"cast(`$pkCol` as bigint) div ${chunkSize}L"))
+    val bucketed = source.withColumn("bucket", rangeBucket(pkCol, chunkSize))
     bucketed.join(broadcast(diff.select("bucket")), Seq("bucket"), "left_semi")
       .drop("bucket")
   }
 
-  /** Hash-bucket variant for COMPOSITE or non-numeric primary keys:
-    * buckets are `hash(pk-tuple) mod nBuckets` instead of contiguous
-    * value ranges — works for any key shape at the cost of reload
-    * locality (a changed bucket's rows are scattered, not a contiguous
-    * range; the reload scan is still one pushed-down pass). Same
-    * commutative per-bucket hash sum, so partial aggregation applies.
-    */
   /** Injective tuple encoding: each component is md5'd individually
     * (fixed-width hex can never contain the separator) and NULL maps to
     * a sentinel no digest can equal — so ('a|b','c') vs ('a','b|c') and
@@ -104,11 +101,25 @@ object RangeHashDiff {
   def pkTuple(pkCols: Seq[String]): Column =
     concat_ws("|", pkCols.map(c => coalesce(md5(col(c).cast("string")), lit("N"))): _*)
 
+  /** Hash-bucket variant for COMPOSITE or non-numeric primary keys:
+    * buckets are `hash(pk-tuple) mod nBuckets` (bigint) instead of
+    * contiguous value ranges — works for any key shape at the cost of
+    * reload locality (a changed bucket's rows are scattered, not a
+    * contiguous range; the reload scan is still one pushed-down pass).
+    * Same commutative per-bucket hash sum, so partial aggregation
+    * applies. The one bucket family of every hash-bucket diff and of
+    * [[BucketedLayout]].
+    */
+  def hashBucket(pkCols: Seq[String], nBuckets: Int): Column =
+    pmod(Hashing.portableHash64(pkTuple(pkCols)), lit(nBuckets.toLong))
+
+  /** Per-key summand of a bucket's key hash. */
+  private def keyHash(pkCols: Seq[String]): Column = Hashing.portableHash32(pkTuple(pkCols))
+
   def hashBucketHashes(df: DataFrame, pkCols: Seq[String], nBuckets: Int,
                        filter: Column = lit(true)): DataFrame =
     df.filter(filter)
-      .select(pmod(Hashing.portableHash64(pkTuple(pkCols)), lit(nBuckets.toLong)).as("bucket"),
-        Hashing.portableHash32(pkTuple(pkCols)).as("kh"))
+      .select(hashBucket(pkCols, nBuckets).as("bucket"), keyHash(pkCols).as("kh"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_keys"), sum(col("kh")).cast("string").as("key_hash"))
 
@@ -126,13 +137,46 @@ object RangeHashDiff {
         coalesce(col("tgt_keys"), lit(0L)).as("tgt_keys"))
   }
 
-  /** Rows of `df` inside the differing hash buckets. */
-  def changedHashBucketRows(df: DataFrame, diff: DataFrame, pkCols: Seq[String],
-                            nBuckets: Int): DataFrame =
-    df.withColumn("bucket",
-        pmod(Hashing.portableHash64(pkTuple(pkCols)), lit(nBuckets.toLong)))
-      .join(broadcast(diff.select("bucket")), Seq("bucket"), "left_semi")
-      .drop("bucket")
+  /** One-pass reconcile summary of a source against a target whose
+    * storage already records each row's hash bucket (a
+    * [[BucketedLayout]] sink: `targetBucket` is its partition column,
+    * so the target side never hashes for the bucket). One row per
+    * bucket present on either side:
+    * `(bucket, src_keys, src_hash, tgt_keys, tgt_hash, changed, max_version)`.
+    *
+    * Key counts and key-hash sums are [[hashBucketDiff]]'s, so an
+    * inserted or deleted key shows as a mismatch between the two sides.
+    * The optional changed-row term `changedSince = (version, watermark)`
+    * (version read as bigint)
+    * adds what a key hash cannot see — value updates: `changed` counts
+    * the bucket's source rows with `version > watermark`, and
+    * `max_version` is the bucket's highest source version. Without the
+    * term `changed` is 0 and `max_version` NULL.
+    *
+    * Both sides feed ONE aggregation: tagged rows of the two scans are
+    * unioned and grouped by bucket — the full outer join of the two
+    * bucket tables in a single shuffle, partial-aggregated map-side, at
+    * most `nBuckets` rows out.
+    */
+  def bucketSummary(source: DataFrame, target: DataFrame, pkCols: Seq[String],
+                    nBuckets: Int, targetBucket: Column,
+                    changedSince: Option[(Column, Long)] = None): DataFrame = {
+    val noVersion = lit(null).cast("long")
+    val version = changedSince.fold(noVersion)(_._1.cast("long"))
+    val changed = changedSince.fold(lit(false))(c => version > lit(c._2))
+    val src = source.select(hashBucket(pkCols, nBuckets).as("bucket"), lit(true).as("is_src"),
+      keyHash(pkCols).as("kh"), changed.as("chg"), version.as("v"))
+    val tgt = target.select(targetBucket.cast("long").as("bucket"), lit(false).as("is_src"),
+      keyHash(pkCols).as("kh"), lit(false).as("chg"), noVersion.as("v"))
+    val isSrc = col("is_src")
+    src.unionByName(tgt).groupBy("bucket").agg(
+      count(when(isSrc, 1)).as("src_keys"),
+      coalesce(sum(when(isSrc, col("kh"))), lit(0L)).as("src_hash"),
+      count(when(!isSrc, 1)).as("tgt_keys"),
+      coalesce(sum(when(!isSrc, col("kh"))), lit(0L)).as("tgt_hash"),
+      count(when(col("chg"), 1)).as("changed"),
+      max(col("v")).as("max_version"))
+  }
 
   /** The net delete set: keys present in target, gone from source.
     * One anti join, shuffled on the key (AQE may broadcast the smaller

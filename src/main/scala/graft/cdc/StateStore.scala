@@ -27,8 +27,6 @@ import org.apache.spark.sql.types._
   * rewritten as one file) so reads stay a single-file scan.
   */
 class StateStore(spark: SparkSession, path: String) {
-  import spark.implicits._
-
   private val compactAfter = 64
 
   // seq: strictly increasing within this process. Seeded from
@@ -98,22 +96,25 @@ class StateStore(spark: SparkSession, path: String) {
     def isEmpty: Boolean = lastSeenVersion == 0L && whereClause.isEmpty
   }
 
-  // get() holds the read lock across the collect: compaction deletes
+  /** Every table's current state in ONE read of the log — what a
+    * replication cycle reads up front instead of a lookup per table.
+    */
+  // all() holds the read lock across the collect: compaction deletes
   // superseded log files, and an unlocked concurrent reader could list
   // a file that vanishes before its scan task opens it. (stateTable()
   // is lazy — callers running their own actions on it should not race
-  // a writer; the Replicator only reads through get().)
-  def get(table: String): TableState = {
+  // a writer; the Replicator only reads through all() and get().)
+  def all(): Map[String, TableState] = {
     val rl = lock.readLock()
     rl.lock()
-    try {
-      val rows = stateTable().filter($"table_name" === table)
-        .select("last_seen_version", "where_clause", "target_rows").collect()
-      if (rows.isEmpty) TableState(0L, "")
-      else TableState(rows.head.getLong(0),
-        Option(rows.head.getString(1)).getOrElse(""), rows.head.getLong(2))
-    } finally rl.unlock()
+    try stateTable().collect().map { r =>
+      r.getString(0) -> TableState(r.getLong(1), Option(r.getString(2)).getOrElse(""), r.getLong(3))
+    }.toMap
+    finally rl.unlock()
   }
+
+  /** One table's current state (empty if never recorded). */
+  def get(table: String): TableState = all().getOrElse(table, TableState(0L, ""))
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -188,6 +189,10 @@ class StateStore(spark: SparkSession, path: String) {
 
   def setTargetRows(table: String, rows: Long): Unit =
     append(table, None, None, Some(rows))
+
+  /** Watermark and target row count in one record (one append). */
+  def setProgress(table: String, version: Long, rows: Long): Unit =
+    append(table, Some(version), None, Some(rows))
 
   // Compaction is the one operation that rewrites the log dir. It runs
   // under the write lock (no append can be in flight) and is rare —

@@ -247,6 +247,148 @@ class CdcSpec extends SparkSpec {
     assert(tgt.join(evolved, Seq("event_id"), "left_anti").count() == 0)
   }
 
+  /** `n` rows of (id, ver, v): version column apart from the key, so a
+    * value update can bump `ver` without touching the key set.
+    */
+  private def versioned(n: Long) =
+    spark.range(n).select($"id", $"id".as("ver"), concat(lit("v"), $"id".cast("string")).as("v"))
+
+  private def versionedCfg(pk: Seq[String] = Seq("id"), where: Option[String] = None) =
+    ReplicationConfig(tables = Seq(TableConfig("t", pk, "ver", where = where)))
+
+  /** The target equals `want` as a multiset of rows, both ways. */
+  private def assertConverged(tgt: org.apache.spark.sql.DataFrame,
+                              want: org.apache.spark.sql.DataFrame): Unit = {
+    val got = tgt.select(want.columns.toSeq.map(col): _*)
+    assert(got.exceptAll(want).isEmpty, "target holds rows the source does not")
+    assert(want.exceptAll(got).isEmpty, "target misses source rows")
+  }
+
+  test("bucketed sink: one reconcile poll applies update, insert and delete exactly") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(200).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new BucketedParquetStore(spark, tgtDir, 8)
+    def poll(): Replicator = {
+      val rep = new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink)
+      rep.run(); rep
+    }
+    poll()
+    val before = partFiles(s"$tgtDir/t.parquet")
+
+    // a value-only update (version bump, same key), a delete and an
+    // insert, each in its own bucket
+    val gb = BucketedLayout.bucketExpr(Seq("id"), 8)
+    val bucketOf = spark.range(1000).select($"id", gb.as("gb")).as[(Long, Int)].collect().toMap
+    val updId = 0L
+    val delId = (1L until 200L).find(k => bucketOf(k) != bucketOf(updId)).get
+    val insId = (200L until 1000L)
+      .find(k => !Set(bucketOf(updId), bucketOf(delId)).contains(bucketOf(k))).get
+    val touched = Set(updId, delId, insId).map(bucketOf)
+    assert(touched.size == 3)
+    val evolved = base.filter($"id" =!= delId)
+      .withColumn("ver", when($"id" === updId, lit(500L)).otherwise($"ver"))
+      .withColumn("v", when($"id" === updId, lit("updated")).otherwise($"v"))
+      .unionByName(Seq((insId, 501L, "inserted")).toDF("id", "ver", "v"))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val rep = poll()
+
+    assertConverged(sink.read("t"), evolved)
+    val after = partFiles(s"$tgtDir/t.parquet")
+    def untouched(m: Map[String, (Long, Long)]) =
+      m.filter { case (p, _) => !touched.exists(k => p.contains(s"graft_bucket=$k/")) }
+    assert(untouched(before).nonEmpty, "fixture must leave some buckets untouched")
+    assert(untouched(after) == untouched(before),
+      "buckets with no change must keep their exact files")
+    val st = rep.state.get("t")
+    assert(st.lastSeenVersion == 501L && st.targetRows == 200L)
+  }
+
+  test("bucketed sink: syncDeletes = false applies updates and keeps deleted rows") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(200).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new BucketedParquetStore(spark, tgtDir, 8)
+    val cfg = versionedCfg().copy(syncDeletes = false)
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+
+    val evolved = base.filter($"id" % 10 =!= 3)
+      .withColumn("ver", when($"id" === 5L, lit(900L)).otherwise($"ver"))
+      .withColumn("v", when($"id" === 5L, lit("updated")).otherwise($"v"))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+
+    val deleted = base.filter($"id" % 10 === 3)
+    assertConverged(sink.read("t"), evolved.unionByName(deleted))
+  }
+
+  test("bucketed sink: syncUpdates = false converges the key set") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(200).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new BucketedParquetStore(spark, tgtDir, 8)
+    new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink).run()
+
+    val evolved = base.filter($"id" % 7 =!= 2)
+      .unionByName(versioned(230).filter($"id" >= 200))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    new Replicator(spark, versionedCfg().copy(syncUpdates = false),
+      new ParquetStore(spark, srcDir), sink).run()
+
+    val keys = sink.read("t").select("id").as[Long].collect()
+    assert(keys.length == keys.distinct.length, "no duplicate keys")
+    assert(keys.toSet == evolved.select("id").as[Long].collect().toSet)
+  }
+
+  test("bucketed sink: a where-filtered table converges to the filtered source") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val where = "v NOT LIKE 'x%'"
+    val base = versioned(300).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new BucketedParquetStore(spark, tgtDir, 8)
+    val cfg = versionedCfg(where = Some(where))
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+    assertConverged(sink.read("t"), base)
+
+    // one update leaves the filter, one stays inside it; inserts on
+    // both sides of the filter; deletes
+    val evolved = base.filter($"id" % 11 =!= 4)
+      .withColumn("ver", when($"id".isin(6L, 7L), lit(1000L) + $"id").otherwise($"ver"))
+      .withColumn("v", when($"id" === 6L, lit("x-out"))
+        .when($"id" === 7L, lit("still-in")).otherwise($"v"))
+      .unionByName(Seq((5000L, 2000L, "x-never"), (5001L, 2001L, "new"))
+        .toDF("id", "ver", "v"))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+    assertConverged(sink.read("t"), evolved.filter(expr(where)))
+  }
+
+  test("bucketed sink: a composite-pk table converges under update, insert and delete") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(240)
+      .select(($"id" % 40).as("a"), expr("id div 40").as("b"), $"ver", $"v").cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new BucketedParquetStore(spark, tgtDir, 8)
+    val cfg = versionedCfg(pk = Seq("a", "b"))
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+    assertConverged(sink.read("t"), base)
+
+    val evolved = base.filter(!($"a" === 3 && $"b" === 2) && !($"a" === 17))
+      .withColumn("ver", when($"a" === 9, $"ver" + 1000L).otherwise($"ver"))
+      .withColumn("v", when($"a" === 9, concat($"v", lit("-u"))).otherwise($"v"))
+      .unionByName(Seq((3L, 99L, 5000L, "new")).toDF("a", "b", "ver", "v"))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val rep = new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink)
+    rep.run()
+    assertConverged(sink.read("t"), evolved)
+    assert(rep.state.get("t").lastSeenVersion == 5000L)
+  }
+
   test("replicator: multi-table sync runs concurrently and converges both tables") {
     val srcDir = tmpDir(); val tgtDir = tmpDir()
     val events = Tables.events(spark, sfDir)

@@ -3569,4 +3569,17 @@ class PipelineSpec extends SparkSpec {
       .select("nmi_ppm").as[Option[Long]].collect().head
     assert(f === None)
   }
+
+  test("Pipeline.run on an empty input reports (0, 0) rows instead of throwing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val inDir = s"$root/docs.parquet"
+    val outDir = s"$root/out"
+    docs.limit(0).write.mode("overwrite").parquet(inDir)
+    val counts = Pipeline.run(spark,
+      s"""{"input": "$inDir", "output": "$outDir",
+         |"stages": [{"op": "entropy_filter", "minMicroNatsPerChar": 1500000},
+         |  {"op": "dedup_exact"}]}""".stripMargin)
+    assert(counts == ((0L, 0L)))
+    assert(spark.read.parquet(outDir).count() == 0)
+  }
 }

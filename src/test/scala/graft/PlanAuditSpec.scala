@@ -1228,4 +1228,11 @@ class PlanAuditSpec extends SparkSpec {
       }
     }
   }
+
+  test("Explain: --cut is the only flag, any other is a usage error") {
+    assert(Explain.parseArgs(Seq("--cut", "q1_agg")) == ((true, Seq("q1_agg"))))
+    assert(Explain.parseArgs(Seq("q1_agg", "q3_join_agg")) == ((false, Seq("q1_agg", "q3_join_agg"))))
+    val e = intercept[IllegalArgumentException](Explain.parseArgs(Seq("--cutt", "q1_agg")))
+    assert(e.getMessage.contains("--cutt"))
+  }
 }
