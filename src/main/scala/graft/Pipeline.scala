@@ -390,14 +390,10 @@ object Pipeline {
         // keep the smallest id per passage-sharing cluster. Catches
         // docs embedding a common passage that dedup_minhash's
         // token-set similarity scores below threshold
-        val pairs = TextAnalysis.winnowPairs(df, textCol, idCol,
-          k = intOf("k", 8), w = intOf("w", 4),
-          minShared = intOf("minShared", 10), maxDf = intOf("maxDf", 1000))
-        val losers = graft.ops.Dedup.connectedComponents(
-            pairs.select("id_a", "id_b"))
-          .filter(col("id") =!= col("cluster"))
-          .select(col("id").as(idCol))
-        df.join(losers, Seq(idCol), "left_anti")
+        graft.ops.Dedup.keepCanonical(df, idCol)(
+          TextAnalysis.winnowPairs(_, textCol, idCol,
+            k = intOf("k", 8), w = intOf("w", 4),
+            minShared = intOf("minShared", 10), maxDf = intOf("maxDf", 1000)))
       case "embed" =>
         // ANNOTATION via the Arrow model-scoring seam (ArrowEmbed):
         // rows gain a fixed-dim float32 vector computed through real

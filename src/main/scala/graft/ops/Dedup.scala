@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.util.Hashing
 
 /** Deduplication operators for LLM-training-data pipelines
@@ -361,17 +363,114 @@ object Dedup {
   /** Connected components over a duplicate-pair graph — the
     * keep-one-per-cluster step a dedup pipeline ends with: every doc
     * in a component gets the component's smallest id as its cluster
-    * label. Iterative min-label propagation (the standard distributed
-    * CC: each round, every vertex takes the min of its own and its
-    * neighbors' labels; converges in O(component diameter) rounds —
-    * what GraphX/GraphFrames run under the hood). Each round is one
-    * join + one partial-aggregated groupBy; labels persist per round
-    * so lineage stays flat.
+    * label.
+    *
+    * Two paths, one answer. A dedup pass's verified pair set is
+    * small (tens of pairs per thousand docs), so the pairs are
+    * collected first: at most `LocalPairCap + 1` rows, read by one
+    * task (one job on a materialized pair set). When at most
+    * `LocalPairCap` (10⁶) come back and the ids are Int, Long or
+    * String, union-find on the driver labels them exactly, instead of
+    * paying several Spark jobs per propagation round (the precedent
+    * is [[Graph.scc]]'s bounded `tarjanLocal` tail). Larger pair sets,
+    * or other id types, run the distributed [[minLabelComponents]]
+    * loop. `maxIter` bounds only that loop; the driver path is exact.
+    *
+    * The driver path reproduces the loop's converged output: String
+    * ids compare in UTF-8 byte order (Spark's `min`), a pair with a
+    * NULL endpoint links nothing and adds one (NULL, NULL) row,
+    * self-loops and repeated pairs change nothing, and the output
+    * schema is the loop's.
     *
     * Input: (id_a, id_b) pairs. Output: (id, cluster) for every vertex
     * that appears in at least one pair.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    val ends = pairs.select(col("id_a"), col("id_b"))
+    val (fa, fb) = (ends.schema("id_a"), ends.schema("id_b"))
+    val local =
+      if (fa.dataType != fb.dataType ||
+          !Seq(IntegerType, LongType, StringType).contains(fa.dataType)) None
+      else {
+        // one partition: limit's take would otherwise run a job per
+        // growing batch of partitions
+        val rows = ends.coalesce(1).limit(LocalPairCap + 1).collect()
+        if (rows.length > LocalPairCap) None
+        else Some(componentsLocal(pairs.sparkSession, rows,
+          fa.copy(nullable = fa.nullable || fb.nullable)))
+      }
+    local.getOrElse(minLabelComponents(pairs, maxIter))
+  }
+
+  /** Most pairs [[connectedComponents]] resolves on the driver: 10⁶
+    * pairs are a few tens of MB collected. */
+  private val LocalPairCap = 1000000
+
+  /** Driver union-find over collected (id_a, id_b) rows. Vertices get
+    * dense indices in id order (UTF-8 byte order for strings), and a
+    * union always hangs the larger root under the smaller, so every
+    * root is its component's smallest index — the min id.
+    */
+  private def componentsLocal(spark: org.apache.spark.sql.SparkSession,
+                              rows: Array[Row], field: StructField): DataFrame = {
+    val m = rows.length
+    // dense index of each endpoint (-1 for NULL) and the id of an index
+    val (ia, ib, nv, idOf) = field.dataType match {
+      case StringType =>
+        def key(r: Row, c: Int) = UTF8String.fromString(r.getString(c))
+        val utf8Order: java.util.Comparator[UTF8String] = _ binaryCompare _
+        val all = rows.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(key(r, _)))
+        java.util.Arrays.sort(all, utf8Order)
+        val ids = distinctSorted(all)
+        val ix = (c: Int) => rows.map(r =>
+          if (r.isNullAt(c)) -1 else java.util.Arrays.binarySearch(ids, key(r, c), utf8Order))
+        (ix(0), ix(1), ids.length, (i: Int) => ids(i).toString)
+      case dt =>
+        def key(r: Row, c: Int) = r.get(c).asInstanceOf[Number].longValue
+        val all = rows.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(key(r, _)))
+        java.util.Arrays.sort(all)
+        val ids = distinctSorted(all)
+        val ix = (c: Int) => rows.map(r =>
+          if (r.isNullAt(c)) -1 else java.util.Arrays.binarySearch(ids, key(r, c)))
+        val idOf: Int => Any =
+          if (dt == IntegerType) i => ids(i).toInt else i => ids(i)
+        (ix(0), ix(1), ids.length, idOf)
+    }
+    val parent = Array.tabulate(nv)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var nullEnd = false
+    (0 until m).foreach { i =>
+      if (ia(i) < 0 || ib(i) < 0) nullEnd = true
+      else {
+        val (ra, rb) = (find(ia(i)), find(ib(i)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    val out = new java.util.ArrayList[Row](nv + 1)
+    (0 until nv).foreach(i => out.add(Row(idOf(i), idOf(find(i)))))
+    if (nullEnd) out.add(Row(null, null))
+    spark.createDataFrame(out, StructType(Seq(
+      field.copy(name = "id"), field.copy(name = "cluster"))))
+  }
+
+  /** The distinct elements of a sorted array, in order. */
+  private def distinctSorted[K: scala.reflect.ClassTag](a: Array[K]): Array[K] =
+    a.indices.collect { case i if i == 0 || a(i) != a(i - 1) => a(i) }.toArray
+
+  /** Distributed connected components: iterative min-label
+    * propagation (the standard distributed CC: each round, every
+    * vertex takes the min of its own and its neighbors' labels;
+    * converges in O(component diameter) rounds — what
+    * GraphX/GraphFrames run under the hood). Each round is one join +
+    * one partial-aggregated groupBy plus a `count()` convergence
+    * probe; labels are truncated per round so lineage stays flat.
+    * [[connectedComponents]]' path for pair sets too large to collect.
+    */
+  private[graft] def minLabelComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // Lineage.truncate, NOT persist: persist caches data but keeps the
     // logical plan, so per-iteration lineage compounds and Catalyst
     // re-optimizes an exponentially growing plan on every action —
@@ -479,16 +578,35 @@ object Dedup {
     * Exact duplicates are J = 1.0, so they are subsumed by the near-dup
     * threshold. This is the one-call corpus-cleaning composition; the
     * building blocks stay available for pipelines that want the pairs
-    * or cluster labels themselves.
+    * or cluster labels themselves. The input is materialized once
+    * ([[keepCanonical]]): the token set and the final anti-join read
+    * it, and so does every later stage that re-reads the result.
     */
   def dedupedCorpus(df: DataFrame, textCol: String, idCol: String,
                     numHashes: Int = 16, numBands: Int = 2,
-                    threshold: Double = 0.7): DataFrame = {
-    val pairs = minHashLsh(df, textCol, idCol, numHashes, numBands, threshold)
-    val losers = connectedComponents(pairs)
+                    threshold: Double = 0.7): DataFrame =
+    keepCanonical(df, idCol)(
+      minHashLsh(_, textCol, idCol, numHashes, numBands, threshold))
+
+  /** Keeps the smallest id of every duplicate cluster: `pairsOf` maps
+    * the input to (id_a, id_b) duplicate pairs, [[connectedComponents]]
+    * groups them, and every row whose id is not its cluster's label is
+    * dropped (left_anti, so the row schema is the input's).
+    *
+    * The input is truncated once (`Lineage.truncate`, which honours
+    * `spark.graft.checkpointDir` and `spark.graft.keepLineage`) and that
+    * one frame feeds both the pair search and the anti-join. Without it
+    * each read re-runs the whole lazy upstream — in a pipeline, every
+    * earlier stage — once for the pairs, once for the anti-join, and
+    * once more for every re-read of the result by later stages.
+    */
+  def keepCanonical(df: DataFrame, idCol: String)(
+      pairsOf: DataFrame => DataFrame): DataFrame = {
+    val in = graft.util.Lineage.truncate(df)
+    val losers = connectedComponents(pairsOf(in))
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    in.join(losers, Seq(idCol), "left_anti")
   }
 
   /** Char-n-gram Jaccard near-dup pairs ≥ threshold: a df-BOUNDED

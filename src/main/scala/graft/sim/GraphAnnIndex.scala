@@ -344,7 +344,7 @@ object GraphAnnIndex {
       .select(col("id").as("id_a"), col("nid").as("id_b"), col("cosine"))
   }
 
-  /** [[dedupPairs]] → min-label connected components: (id, cluster)
+  /** [[dedupPairs]] → connected components: (id, cluster)
     * for every store member of a near-dup group — the batch sweep
     * that closes the ANN↔dedup loop against the persisted store.
     */

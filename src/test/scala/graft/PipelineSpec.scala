@@ -1984,6 +1984,41 @@ class PipelineSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L))
   }
 
+  test("connected components of a small pair set start at most 2 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a materialized 100-pair set over 8 partitions, the shape
+    // minHashLsh hands to connectedComponents
+    val pairs = graft.util.Lineage.truncate(spark.range(100).repartition(8)
+      .select(($"id" % 37).as("id_a"), ($"id" * 7 % 53 + 40).as("id_b")))
+    val sc = spark.sparkContext
+    // job group of every started job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    val cc = try {
+      sc.setJobGroup("cc_pin", "cc_pin", interruptOnCancel = false)
+      val out = Dedup.connectedComponents(pairs)
+      // the listener bus is asynchronous and ordered: once a later
+      // marker job is seen, every job of the call above has been too
+      sc.setJobGroup("cc_marker", "cc_marker", interruptOnCancel = false)
+      sc.parallelize(0 until 1, 1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!jobs.contains("cc_marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(jobs.contains("cc_marker"))
+      out
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    val started = jobs.toArray.count(_ == "cc_pin")
+    assert(started <= 2, s"connectedComponents started $started jobs")
+    assert(cc.schema == Dedup.minLabelComponents(pairs).schema)
+    assert(cc.count() == pairs.select($"id_a".as("v"))
+      .union(pairs.select($"id_b")).distinct().count())
+  }
+
   test("ivf top-k: ranked output bounded by the exact search") {
     val e = Tables.embeddings(spark, sfDir)
     val ivf = Similarity.ivfTopK(e, "embedding", "vec_id",

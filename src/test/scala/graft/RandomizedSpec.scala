@@ -3,7 +3,7 @@ package graft
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.cdc.{Merge, RangeHashDiff}
-import graft.ops.AsOfJoin
+import graft.ops.{AsOfJoin, Dedup}
 
 /** Seeded randomized cross-checks: each operator vs a naive in-memory
   * reference implementation over generated tables. Complements the
@@ -126,6 +126,66 @@ class RandomizedSpec extends SparkSpec {
       // the chain's far end must carry the chain-head label — the
       // multi-hop case a bounded label propagation gets wrong
       assert(got(base + 200L) == base)
+    }
+  }
+
+  test("connected components equal union-find on the driver path and the distributed loop") {
+    // reference: union-find labelling each component with its least id
+    // under `lt`; a NULL endpoint links nothing and adds (NULL, NULL)
+    def reference[T](pairs: Seq[(Option[T], Option[T])], lt: (T, T) => Boolean)
+        : Set[(Option[String], Option[String])] = {
+      val parent = scala.collection.mutable.Map.empty[T, T]
+      def find(x: T): T = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach {
+        case (Some(a), Some(b)) =>
+          val (ra, rb) = (find(a), find(b))
+          if (lt(ra, rb)) parent(rb) = ra else if (lt(rb, ra)) parent(ra) = rb
+        case (a, b) => (a ++ b).foreach(find)
+      }
+      val labels: Set[(Option[String], Option[String])] = parent.keys.toList
+        .map(k => (Option(k.toString), Option(find(k).toString))).toSet
+      if (pairs.exists(p => p._1.isEmpty || p._2.isEmpty)) labels + ((None, None))
+      else labels
+    }
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r =>
+        (Option(r.get(0)).map(_.toString), Option(r.get(1)).map(_.toString))).toSet
+    // random graph over `ids` plus self-loops, repeated pairs and a
+    // NULL endpoint
+    def graph[T](rnd: Random, ids: IndexedSeq[T]): Seq[(Option[T], Option[T])] = {
+      def pick = ids(rnd.nextInt(ids.size))
+      val random = Seq.fill(rnd.nextInt(ids.size) + 5)((Option(pick), Option(pick)))
+      val loop = Option(pick)
+      random ++ random.take(3) ++ Seq((loop, loop), (Option(pick), None))
+    }
+    def check[T](pairs: Seq[(Option[T], Option[T])], lt: (T, T) => Boolean,
+                 df: org.apache.spark.sql.DataFrame): Unit = {
+      val expect = reference(pairs, lt)
+      val driver = Dedup.connectedComponents(df)
+      assert(labels(driver) == expect, "driver path")
+      // maxIter high enough that the loop converges on any of these
+      val loop = Dedup.minLabelComponents(df, maxIter = 1000)
+      assert(labels(loop) == expect, "distributed loop")
+      assert(driver.schema == loop.schema)
+    }
+    val rnd = new Random(2024)
+    (1 to 2).foreach { _ =>
+      val longs = graph(rnd, (0L until 60L).map(_ * 1000003L - 7000000L))
+      check[Long](longs, _ < _, longs.toDF("id_a", "id_b"))
+      val ints = graph(rnd, (0 until 60).map(_ * 37 - 900))
+      check[Int](ints, _ < _, ints.toDF("id_a", "id_b"))
+      // U+FF21 sorts before U+1F600 in UTF-8 bytes (Spark's string
+      // order) but after it in UTF-16 code units (String.compareTo):
+      // the pair of them is one component whose label tells the two apart
+      val strs = graph(rnd, (0 until 40).map(i => s"d$i") ++
+        Seq("\uFF21", "\uD83D\uDE00", "\u00E9", "z", "Z", "")) ++
+        Seq((Some("\uD83D\uDE00"), Some("\uFF21")), (Some("\uFF21x"), Some("\uD83D\uDE00y")))
+      val utf8Lt = (a: String, b: String) => java.util.Arrays.compareUnsigned(
+        a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0
+      check[String](strs, utf8Lt, strs.toDF("id_a", "id_b"))
     }
   }
 
