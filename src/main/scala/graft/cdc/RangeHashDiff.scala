@@ -43,21 +43,20 @@ object RangeHashDiff {
     * non-negative key spaces.
     */
   def bucketHashes(df: DataFrame, pkCol: String, chunkSize: Long,
-                   ordered: Boolean = false, filter: Column = lit(true)): DataFrame = {
-    val pk = col(pkCol)
-    val keyed = df.filter(filter)
-      .select(rangeBucket(pkCol, chunkSize).as("bucket"), pk.as("pk"))
-    if (ordered) {
-      keyed.groupBy("bucket").agg(
-        count(lit(1)).as("n_keys"),
-        md5(array_join(transform(sort_array(collect_list(col("pk"))),
-          x => x.cast("string")), ",")).as("key_hash"))
-    } else {
-      keyed.groupBy("bucket").agg(
-        count(lit(1)).as("n_keys"),
-        sum(Hashing.portableHash32(col("pk").cast("string"))).cast("string").as("key_hash"))
-    }
-  }
+                   ordered: Boolean = false): DataFrame =
+    if (ordered)
+      df.select(rangeBucket(pkCol, chunkSize).as("bucket"), col(pkCol).as("pk"))
+        .groupBy("bucket").agg(
+          count(lit(1)).as("n_keys"),
+          md5(array_join(transform(sort_array(collect_list(col("pk"))),
+            x => x.cast("string")), ",")).as("key_hash"))
+    else hashSums(df, rangeBucket(pkCol, chunkSize), Hashing.portableHash32(col(pkCol).cast("string")))
+
+  /** `(bucket, n_keys, key_hash[string])`: per-bucket key count and sum of per-key hashes. */
+  private def hashSums(df: DataFrame, bucket: Column, kh: Column): DataFrame =
+    df.select(bucket.as("bucket"), kh.as("kh"))
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("n_keys"), sum(col("kh")).cast("string").as("key_hash"))
 
   /** Buckets whose key sets differ between source and target —
     * the distributed one-pass analog of the reference's recursive
@@ -66,12 +65,17 @@ object RangeHashDiff {
     * (AQE broadcasts it when one side fits).
     */
   def diffBuckets(source: DataFrame, target: DataFrame, pkCol: String, chunkSize: Long,
-                  ordered: Boolean = false): DataFrame = {
-    val s = bucketHashes(source, pkCol, chunkSize, ordered)
-      .withColumnsRenamed(Map("n_keys" -> "src_keys", "key_hash" -> "src_hash"))
-    val t = bucketHashes(target, pkCol, chunkSize, ordered)
-      .withColumnsRenamed(Map("n_keys" -> "tgt_keys", "key_hash" -> "tgt_hash"))
-    s.join(t, Seq("bucket"), "full_outer")
+                  ordered: Boolean = false): DataFrame =
+    divergent(bucketHashes(source, pkCol, chunkSize, ordered),
+      bucketHashes(target, pkCol, chunkSize, ordered))
+
+  /** Full outer join of two per-bucket hash tables, keeping the buckets
+    * whose hashes differ: `(bucket, src_keys, tgt_keys)`.
+    */
+  private def divergent(src: DataFrame, tgt: DataFrame): DataFrame = {
+    def side(df: DataFrame, p: String) =
+      df.withColumnsRenamed(Map("n_keys" -> s"${p}_keys", "key_hash" -> s"${p}_hash"))
+    side(src, "src").join(side(tgt, "tgt"), Seq("bucket"), "full_outer")
       .filter(coalesce(col("src_hash"), lit("∅")) =!= coalesce(col("tgt_hash"), lit("∅")))
       .select(col("bucket"),
         coalesce(col("src_keys"), lit(0L)).as("src_keys"),
@@ -116,32 +120,18 @@ object RangeHashDiff {
   /** Per-key summand of a bucket's key hash. */
   private def keyHash(pkCols: Seq[String]): Column = Hashing.portableHash32(pkTuple(pkCols))
 
-  def hashBucketHashes(df: DataFrame, pkCols: Seq[String], nBuckets: Int,
-                       filter: Column = lit(true)): DataFrame =
-    df.filter(filter)
-      .select(hashBucket(pkCols, nBuckets).as("bucket"), keyHash(pkCols).as("kh"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_keys"), sum(col("kh")).cast("string").as("key_hash"))
+  def hashBucketHashes(df: DataFrame, pkCols: Seq[String], nBuckets: Int): DataFrame =
+    hashSums(df, hashBucket(pkCols, nBuckets), keyHash(pkCols))
 
   /** Buckets whose composite-key sets differ between source and target. */
   def hashBucketDiff(source: DataFrame, target: DataFrame, pkCols: Seq[String],
-                     nBuckets: Int): DataFrame = {
-    val s = hashBucketHashes(source, pkCols, nBuckets)
-      .withColumnsRenamed(Map("n_keys" -> "src_keys", "key_hash" -> "src_hash"))
-    val t = hashBucketHashes(target, pkCols, nBuckets)
-      .withColumnsRenamed(Map("n_keys" -> "tgt_keys", "key_hash" -> "tgt_hash"))
-    s.join(t, Seq("bucket"), "full_outer")
-      .filter(coalesce(col("src_hash"), lit("∅")) =!= coalesce(col("tgt_hash"), lit("∅")))
-      .select(col("bucket"),
-        coalesce(col("src_keys"), lit(0L)).as("src_keys"),
-        coalesce(col("tgt_keys"), lit(0L)).as("tgt_keys"))
-  }
+                     nBuckets: Int): DataFrame =
+    divergent(hashBucketHashes(source, pkCols, nBuckets), hashBucketHashes(target, pkCols, nBuckets))
 
-  /** One-pass reconcile summary of a source against a target whose
-    * storage already records each row's hash bucket (a
-    * [[BucketedLayout]] sink: `targetBucket` is its partition column,
-    * so the target side never hashes for the bucket). One row per
-    * bucket present on either side:
+  /** One-pass reconcile summary of a source against a target, each
+    * side bucketed by its own column (a [[BucketedLayout]] sink's
+    * `targetBucket` is its partition column, so that side never
+    * hashes). One row per bucket present on either side:
     * `(bucket, src_keys, src_hash, tgt_keys, tgt_hash, changed, max_version)`.
     *
     * Key counts and key-hash sums are [[hashBucketDiff]]'s, so an
@@ -155,16 +145,16 @@ object RangeHashDiff {
     *
     * Both sides feed ONE aggregation: tagged rows of the two scans are
     * unioned and grouped by bucket — the full outer join of the two
-    * bucket tables in a single shuffle, partial-aggregated map-side, at
-    * most `nBuckets` rows out.
+    * bucket tables in a single shuffle, partial-aggregated map-side, one
+    * row per bucket out (a NULL bucket, from a NULL range key, included).
     */
   def bucketSummary(source: DataFrame, target: DataFrame, pkCols: Seq[String],
-                    nBuckets: Int, targetBucket: Column,
+                    sourceBucket: Column, targetBucket: Column,
                     changedSince: Option[(Column, Long)] = None): DataFrame = {
     val noVersion = lit(null).cast("long")
     val version = changedSince.fold(noVersion)(_._1.cast("long"))
     val changed = changedSince.fold(lit(false))(c => version > lit(c._2))
-    val src = source.select(hashBucket(pkCols, nBuckets).as("bucket"), lit(true).as("is_src"),
+    val src = source.select(sourceBucket.as("bucket"), lit(true).as("is_src"),
       keyHash(pkCols).as("kh"), changed.as("chg"), version.as("v"))
     val tgt = target.select(targetBucket.cast("long").as("bucket"), lit(false).as("is_src"),
       keyHash(pkCols).as("kh"), lit(false).as("chg"), noVersion.as("v"))

@@ -1,7 +1,8 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Per-table replication settings (reference: internal/config.go).
   *
@@ -42,19 +43,18 @@ case class ReplicationConfig(
   *
   * Stores are parquet directories in the specs ([[ParquetStore]]) or
   * databases ([[JdbcStore]], the reference's actual medium). Each
-  * cycle reads the state log once, then: validate (dependency cycles,
-  * schema drift, where-clause drift) → update (watermark incremental
-  * pull + upsert, or full copy when stale per fullCopyThreshold) →
-  * delete-sync (range-hash diff + changed-range reload). State (last
-  * seen version + where clause per table) persists in a StateStore at
-  * the sink's state path, like the reference's __sslr_state.
+  * cycle reads the state log once, validates (dependency cycles,
+  * schema drift, where-clause drift), then polls each table ONCE: a
+  * full copy when stale per fullCopyThreshold, else the watermark
+  * incremental pull + upsert with, when deletes sync, the range-hash
+  * diff + changed-range reload folded in — one key diff and at most one
+  * write per table. State (last seen version + where clause per table)
+  * persists in a StateStore at the sink's state path, like the
+  * reference's __sslr_state.
   *
-  * On a [[BucketedParquetStore]] sink with delete sync on, update and
-  * delete-sync are ONE reconcile per table per poll (see the private
-  * `reconcile`): a per-bucket summary of source against target flags
-  * the buckets holding an insert, a delete or a changed row, and one
-  * bucket overwrite rewrites exactly those from the source. A table
-  * that was fully copied in a cycle skips that cycle's delete diff.
+  * With delete sync on, a [[BucketedParquetStore]] sink's poll is the
+  * private `reconcile` (one bucket summary, one overwrite of the flagged
+  * buckets from the source) and a flat sink's is `rewriteFlat`.
   */
 class Replicator(spark: SparkSession, cfg: ReplicationConfig,
                  source: TableStore, sink: TableStore) {
@@ -67,16 +67,10 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
 
   val state = new StateStore(spark, sink.statePath)
 
-  private def readSource(t: TableConfig): DataFrame = {
-    val df = source.read(t.name)
+  private def readSource(t: TableConfig): DataFrame = filtered(t, source.read(t.name))
+
+  private def filtered(t: TableConfig, df: DataFrame): DataFrame =
     t.where.map(w => df.filter(expr(w))).getOrElse(df)
-  }
-
-  private def targetExists(t: String): Boolean = sink.exists(t)
-
-  private def readTarget(t: String): DataFrame = sink.read(t)
-
-  private def writeTarget(t: String, df: DataFrame): Unit = sink.write(t, df)
 
   /** Tables whose validation found drift requiring a full resync. */
   private var forceSync = Set.empty[String]
@@ -89,11 +83,6 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
   private def stateOf(table: String): state.TableState =
     cycleState.fold(state.get(table))(_.getOrElse(table, state.TableState(0L, "")))
 
-  /** Tables whose target already equals the source snapshot this cycle
-    * (full copy or bucket reconcile): their delete sync has nothing to do.
-    */
-  private val synced = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   // -- validate ------------------------------------------------------
 
   /** Cycle-checked dependency validation (reference job.go:96-160). */
@@ -102,7 +91,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     // per table: fetch them concurrently, walk the dependencies after
     val schemas = perTable(cfg.tables.map(_.name)) { name =>
       name -> (source.read(name).schema,
-        if (targetExists(name)) Some(readTarget(name).schema) else None)
+        if (sink.exists(name)) Some(sink.read(name).schema) else None)
     }.toMap
     var status = Map.empty[String, String] // unknown -> validating -> valid
     def validate(name: String): Unit = {
@@ -141,7 +130,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
 
   def updateTable(t: TableConfig): Unit = {
     val st = stateOf(t.name)
-    val stale = forceSync.contains(t.name) || st.lastSeenVersion == 0L || !targetExists(t.name)
+    val stale = forceSync.contains(t.name) || st.lastSeenVersion == 0L || !sink.exists(t.name)
     sink match {
       case b: BucketedParquetStore if cfg.syncDeletes && !stale => reconcile(t, b, Some(st))
       case _ => pullAndApply(t, st, stale)
@@ -156,7 +145,9 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
   private def chunkParts(srcCount: Long): Int =
     math.max(1, math.ceil(srcCount.toDouble / cfg.updateChunkSize).toInt)
 
-  /** Watermark pull + upsert, or a full copy when the target is stale. */
+  /** Watermark pull + upsert, or a full copy when the target is stale;
+    * with delete sync on (a flat sink) the upsert is a [[rewriteFlat]].
+    */
   private def pullAndApply(t: TableConfig, st: state.TableState, stale: Boolean): Unit = {
     val src = readSource(t)
     val version = col(t.versionColumn).cast("long")
@@ -172,7 +163,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
       // I/O; the recorded number is exact because this job is the
       // target's only writer (checkpoint single-writer rule)
       val tgtCount =
-        if (st.targetRows >= 0) st.targetRows else readTarget(t.name).count()
+        if (st.targetRows >= 0) st.targetRows else sink.read(t.name).count()
       tgtCount < srcCount * cfg.fullCopyThreshold
     }
 
@@ -183,30 +174,33 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
       // if the source gains rows between the two actions (live feeds;
       // see ChangeCapture.incrementalPull on snapshot isolation).
       // eager truncation: the change batch feeds up to four actions
-      // (emptiness, affected-bucket collect, both merge sides) — ONE
-      // source extraction, not four (decisive on a JDBC source, and
-      // the reads can't disagree on a live one). Durable under
-      // spark.graft.checkpointDir: an executor loss mid-merge then
+      // (emptiness, affected-bucket collect or key diff, both merge
+      // sides) — ONE source extraction, not four (decisive on a JDBC
+      // source, and the reads can't disagree on a live one). Durable
+      // under spark.graft.checkpointDir: an executor loss mid-merge then
       // re-reads the batch from storage instead of re-querying a
       // source that has already moved past the recorded watermark.
       val changes = graft.util.Lineage.truncate(ChangeCapture.incrementalPull(
         src, version, st.lastSeenVersion, upperBound = Some(maxVersion)))
-      if (!changes.isEmpty) {
+      if (cfg.syncDeletes) rewriteFlat(t, src, Some(changes)) match {
+        case Some(rows) => state.setProgress(t.name, maxVersion, rows)
+        case None if maxVersion != st.lastSeenVersion => state.setVersion(t.name, maxVersion)
+        case None => ()
+      } else if (!changes.isEmpty) {
         sink match {
           case b: BucketedParquetStore =>
             // O(batch) merge: read ONLY the partitions the change batch
             // touches (partition-pruned scan) and swap only those back
             b.upsert(t.name, changes, t.primaryKeys)
           case _ =>
-            writeTarget(t.name,
-              Merge.upsert(readTarget(t.name), changes, t.primaryKeys)
+            sink.write(t.name,
+              Merge.upsert(sink.read(t.name), changes, t.primaryKeys)
                 .repartition(chunkParts(srcCount), t.primaryKeys.map(col): _*))
         }
         // one post-write metadata count per ACTUAL write (idle cycles
         // never touch the target at all)
-        state.setTargetRows(t.name, readTarget(t.name).count())
-      }
-      state.setVersion(t.name, maxVersion)
+        state.setProgress(t.name, maxVersion, sink.read(t.name).count())
+      } else state.setVersion(t.name, maxVersion)
     }
   }
 
@@ -220,20 +214,30 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     // reference's single streaming connection (copy.go:11)
     val copySrc = (source, t.primaryKeys) match {
       case (j: JdbcStore, Seq(pk)) if cfg.copyChunks > 1 =>
-        val df = j.readChunked(t.name, pk, cfg.copyChunks)
-        t.where.map(w => df.filter(expr(w))).getOrElse(df)
+        filtered(t, j.readChunked(t.name, pk, cfg.copyChunks))
       case _ => src
     }
     sink match {
       case b: BucketedParquetStore =>
         b.writeFull(t.name, ChangeCapture.fullCopy(copySrc), t.primaryKeys)
       case _ =>
-        writeTarget(t.name, ChangeCapture.fullCopy(copySrc)
+        sink.write(t.name, ChangeCapture.fullCopy(copySrc)
           .repartition(chunkParts(srcCount), t.primaryKeys.map(col): _*))
     }
     state.setProgress(t.name, maxVersion, srcCount)
-    synced.add(t.name)
   }
+
+  /** Buckets a summary flags: key count or key-hash sum differ, or a
+    * source row passed the watermark. A NULL bucket is never flagged.
+    */
+  private def flaggedBuckets(summary: Array[Row]): Seq[Long] = summary.filter { r =>
+    !r.isNullAt(r.fieldIndex("bucket")) && (
+      r.getAs[Long]("src_keys") != r.getAs[Long]("tgt_keys") ||
+        r.getAs[Long]("src_hash") != r.getAs[Long]("tgt_hash") ||
+        r.getAs[Long]("changed") > 0)
+  }.map(_.getAs[Long]("bucket")).toSeq
+
+  private def total(summary: Array[Row], c: String): Long = summary.map(_.getAs[Long](c)).sum
 
   /** One-pass bucket reconcile of a table into a bucketed sink — the
     * whole poll for that table: the watermark pull, the upsert, the
@@ -253,11 +257,13 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     *     not read again.
     *  4. Bookkeeping from the summary: row count, max version and the
     *     new target row count (Σ source keys) — no range query, no
-    *     post-write count. On a LIVE source the recorded count can be
-    *     off by rows that land between the summary and the rewrite; it
-    *     only feeds the fullCopyThreshold check, and such rows carry
-    *     versions past the recorded watermark (or change a key hash), so
-    *     the next poll flags and rewrites their buckets.
+    *     post-write count. The summary, a full copy and the rewrite
+    *     share ONE source frame, so a file source's scans see one
+    *     listing; rows a LIVE source commits between them can still
+    *     make the recorded count off. It only feeds the
+    *     fullCopyThreshold check, and such rows carry versions past the
+    *     recorded watermark (or change a key hash), so the next poll
+    *     flags and rewrites their buckets.
     *
     * With `tracked` = None (updates not synced) the same reconcile
     * runs without the watermark term: delete sync with source reloads.
@@ -268,28 +274,25 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     // a stale or changed layout first (readWithBuckets then heals an
     // interrupted swap before the scan)
     b.ensureLayout(t.name, t.primaryKeys)
-    val summary = RangeHashDiff.bucketSummary(readSource(t), b.readWithBuckets(t.name),
-      t.primaryKeys, b.nBuckets, col(BucketedLayout.GB),
+    val src = readSource(t)
+    val summary = RangeHashDiff.bucketSummary(src, b.readWithBuckets(t.name), t.primaryKeys,
+      RangeHashDiff.hashBucket(t.primaryKeys, b.nBuckets), col(BucketedLayout.GB),
       tracked.map(st => col(t.versionColumn) -> st.lastSeenVersion)).collect()
-    def total(c: String) = summary.map(_.getAs[Long](c)).sum
-    val srcCount = total("src_keys")
+    val srcCount = total(summary, "src_keys")
     val maxVersion = summary.flatMap(r => Option(r.getAs[java.lang.Long]("max_version")))
       .map(_.longValue).maxOption.getOrElse(0L)
 
     // the recorded count, as on the pull path; the summary's target
     // count stands in when none is recorded
-    val tgtCount = tracked.map(st => if (st.targetRows >= 0) st.targetRows else total("tgt_keys"))
+    val tgtCount = tracked.map(st =>
+      if (st.targetRows >= 0) st.targetRows else total(summary, "tgt_keys"))
     if (tgtCount.exists(_ < srcCount * cfg.fullCopyThreshold))
-      copyFull(t, readSource(t), srcCount, maxVersion)
+      copyFull(t, src, srcCount, maxVersion)
     else {
-      val flagged = summary.filter { r =>
-        r.getAs[Long]("src_keys") != r.getAs[Long]("tgt_keys") ||
-          r.getAs[Long]("src_hash") != r.getAs[Long]("tgt_hash") ||
-          r.getAs[Long]("changed") > 0
-      }.map(_.getAs[Long]("bucket").toInt).toSeq
+      val flagged = flaggedBuckets(summary).map(_.toInt)
       if (flagged.nonEmpty) {
         val gb = BucketedLayout.bucketExpr(t.primaryKeys, b.nBuckets)
-        b.overwriteBuckets(t.name, readSource(t).filter(gb.isin(flagged: _*)),
+        b.overwriteBuckets(t.name, src.filter(gb.isin(flagged: _*)),
           t.primaryKeys, clearBuckets = flagged)
       }
       tracked match {
@@ -298,68 +301,74 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
         case None if flagged.nonEmpty => state.setTargetRows(t.name, srcCount)
         case _ => ()
       }
-      synced.add(t.name)
+    }
+  }
+
+  /** A flat-sink poll with delete sync on: the reference's upsert,
+    * range-hash compare and range reload (deletes.go:13-230) as ONE key
+    * diff and at most ONE staged rewrite. The summary compares the
+    * source with the target the upsert of `batch` will produce, so only
+    * a delete (or a change the batch missed) flags a bucket — against
+    * the pre-upsert target every insert would flag and reload its range.
+    * The rewrite is the upserted target with the flagged buckets swapped
+    * for their source rows; NULL-bucket rows (NULL range key) are never
+    * reloaded. Returns Σ source keys when it wrote.
+    */
+  private def rewriteFlat(t: TableConfig, src: DataFrame,
+                          batch: Option[DataFrame]): Option[Long] = {
+    val pks = t.primaryKeys
+    // contiguous value ranges of a single integral key (deletes.go:160);
+    // hash buckets of any other key, which a bigint cast would reject
+    val bucket = src.select(pks.map(col): _*).schema.map(_.dataType) match {
+      case Seq(ByteType | ShortType | IntegerType | LongType) =>
+        RangeHashDiff.rangeBucket(pks.head, cfg.deleteChunkSize)
+      case _ => RangeHashDiff.hashBucket(pks, math.max(1, (cfg.deleteChunkSize / 16).toInt))
+    }
+    val tgt = sink.read(t.name)
+    val pulled = batch.filterNot(_.isEmpty)
+    val upserted = pulled.fold(tgt)(Merge.upsert(tgt, _, pks))
+    val summary = RangeHashDiff.bucketSummary(src, upserted, pks, bucket, bucket).collect()
+    val flagged = flaggedBuckets(summary)
+    if (pulled.isEmpty && flagged.isEmpty) None
+    else {
+      val srcCount = total(summary, "src_keys")
+      val rows = if (flagged.isEmpty) upserted else {
+        val inFlagged = coalesce(bucket.isin(flagged: _*), lit(false))
+        upserted.filter(!inFlagged).unionByName(src.filter(inFlagged))
+      }
+      sink.write(t.name, rows.repartition(chunkParts(srcCount), pks.map(col): _*))
+      Some(srcCount)
     }
   }
 
   // -- deletes -------------------------------------------------------
 
+  /** Delete sync with updates off: the poll's diff and rewrite without
+    * the watermark term, on either sink.
+    */
   def syncDeletes(t: TableConfig): Unit = sink match {
-    // Bucket-aligned delete sync: the summary's hash buckets ARE the
-    // sink's storage partitions, so "divergent bucket" maps 1:1 to
-    // "partition to reload" — rewrite exactly those directories,
-    // O(divergence) I/O instead of a full-table stage-and-swap.
     case b: BucketedParquetStore => reconcile(t, b, tracked = None)
-    case _ => syncDeletesFullRewrite(t)
+    case _ => rewriteFlat(t, readSource(t), batch = None).foreach(state.setTargetRows(t.name, _))
   }
 
-  private def syncDeletesFullRewrite(t: TableConfig): Unit = {
-    val src = readSource(t)
-    val tgt = readTarget(t.name)
-    val (diff, bucket) = t.primaryKeys match {
-      // single numeric pk: contiguous value-range buckets (reference
-      // semantics, deletes.go:160 — reloads are contiguous ranges)
-      case Seq(pk) =>
-        (RangeHashDiff.diffBuckets(src, tgt, pk, cfg.deleteChunkSize),
-          RangeHashDiff.rangeBucket(pk, cfg.deleteChunkSize))
-      // composite pk: hash buckets — any key shape, same 2-scan diff
-      case pks =>
-        val nBuckets = math.max(1, (cfg.deleteChunkSize / 16).toInt)
-        (RangeHashDiff.hashBucketDiff(src, tgt, pks, nBuckets),
-          RangeHashDiff.hashBucket(pks, nBuckets))
-    }
-    // the diff runs ONCE: the clean step and the reload both take its
-    // buckets as a literal set. A NULL key's bucket never matches (as in
-    // a join), so such rows stay in the target and are not reloaded.
-    val flagged = diff.select("bucket").collect().filterNot(_.isNullAt(0)).map(_.getLong(0))
-    if (flagged.nonEmpty) {
-      val inFlagged = bucket.isin(flagged.toSeq: _*)
-      val cleaned = tgt.filter(!coalesce(inFlagged, lit(false)))
-      writeTarget(t.name, cleaned.unionByName(src.filter(inFlagged)))
-      state.setTargetRows(t.name, readTarget(t.name).count())
-    }
-  }
-
-  /** One full sync cycle: validate → update → delete-sync, over the
-    * state log read ONCE. Tables sync CONCURRENTLY (they touch disjoint
-    * paths and the StateStore serializes its own writes) — the
-    * reference is sequential only because it owns a single database
-    * connection; a cluster engine overlaps one table's shuffle with
-    * another's scan.
+  /** One full sync cycle over the state log read ONCE: validate, then
+    * one poll per table (`syncDeletes` alone when updates are off).
+    * Tables sync CONCURRENTLY (they touch disjoint paths and the
+    * StateStore serializes its own writes) — the reference is
+    * sequential only because it owns a single database connection; a
+    * cluster engine overlaps one table's shuffle with another's scan.
     */
   def run(): Unit = {
-    synced.clear()
     cycleState = Some(state.all())
     try {
       validateTables()
       perTable(cfg.tables) { t =>
         if (cfg.syncUpdates) updateTable(t)
-        if (cfg.syncDeletes && !synced.contains(t.name) && targetExists(t.name)) syncDeletes(t)
+        else if (cfg.syncDeletes && sink.exists(t.name)) syncDeletes(t)
       }
     } finally {
       cycleState = None
       forceSync = Set.empty
-      synced.clear()
     }
   }
 

@@ -305,88 +305,206 @@ class CdcSpec extends SparkSpec {
     assert(st.lastSeenVersion == 501L && st.targetRows == 200L)
   }
 
-  test("bucketed sink: syncDeletes = false applies updates and keeps deleted rows") {
-    val srcDir = tmpDir(); val tgtDir = tmpDir()
-    val base = versioned(200).cache()
-    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    val sink = new BucketedParquetStore(spark, tgtDir, 8)
-    val cfg = versionedCfg().copy(syncDeletes = false)
-    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+  /** The two sink kinds the poll specs below run over. */
+  private val sinkKinds: Seq[(String, String => ParquetStore)] = Seq(
+    "bucketed sink" -> (dir => new BucketedParquetStore(spark, dir, 8)),
+    "flat sink" -> (dir => new ParquetStore(spark, dir)))
 
-    val evolved = base.filter($"id" % 10 =!= 3)
-      .withColumn("ver", when($"id" === 5L, lit(900L)).otherwise($"ver"))
-      .withColumn("v", when($"id" === 5L, lit("updated")).otherwise($"v"))
-      .cache()
-    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+  for ((kind, mkSink) <- sinkKinds) {
+    test(s"$kind: syncDeletes = false applies updates and keeps deleted rows") {
+      val srcDir = tmpDir(); val tgtDir = tmpDir()
+      val base = versioned(200).cache()
+      base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val sink = mkSink(tgtDir)
+      val cfg = versionedCfg().copy(syncDeletes = false)
+      new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
 
-    val deleted = base.filter($"id" % 10 === 3)
-    assertConverged(sink.read("t"), evolved.unionByName(deleted))
+      val evolved = base.filter($"id" % 10 =!= 3)
+        .withColumn("ver", when($"id" === 5L, lit(900L)).otherwise($"ver"))
+        .withColumn("v", when($"id" === 5L, lit("updated")).otherwise($"v"))
+        .cache()
+      evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+
+      val deleted = base.filter($"id" % 10 === 3)
+      assertConverged(sink.read("t"), evolved.unionByName(deleted))
+    }
+
+    test(s"$kind: syncUpdates = false converges the key set") {
+      val srcDir = tmpDir(); val tgtDir = tmpDir()
+      val base = versioned(200).cache()
+      base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val sink = mkSink(tgtDir)
+      new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink).run()
+
+      val evolved = base.filter($"id" % 7 =!= 2)
+        .unionByName(versioned(230).filter($"id" >= 200))
+        .cache()
+      evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      new Replicator(spark, versionedCfg().copy(syncUpdates = false),
+        new ParquetStore(spark, srcDir), sink).run()
+
+      val keys = sink.read("t").select("id").as[Long].collect()
+      assert(keys.length == keys.distinct.length, "no duplicate keys")
+      assert(keys.toSet == evolved.select("id").as[Long].collect().toSet)
+    }
+
+    test(s"$kind: a where-filtered table converges to the filtered source") {
+      val srcDir = tmpDir(); val tgtDir = tmpDir()
+      val where = "v NOT LIKE 'x%'"
+      val base = versioned(300).cache()
+      base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val sink = mkSink(tgtDir)
+      val cfg = versionedCfg(where = Some(where))
+      new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+      assertConverged(sink.read("t"), base)
+
+      // one update leaves the filter, one stays inside it; inserts on
+      // both sides of the filter; deletes
+      val evolved = base.filter($"id" % 11 =!= 4)
+        .withColumn("ver", when($"id".isin(6L, 7L), lit(1000L) + $"id").otherwise($"ver"))
+        .withColumn("v", when($"id" === 6L, lit("x-out"))
+          .when($"id" === 7L, lit("still-in")).otherwise($"v"))
+        .unionByName(Seq((5000L, 2000L, "x-never"), (5001L, 2001L, "new"))
+          .toDF("id", "ver", "v"))
+        .cache()
+      evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+      assertConverged(sink.read("t"), evolved.filter(expr(where)))
+    }
+
+    test(s"$kind: a composite-pk table converges under update, insert and delete") {
+      val srcDir = tmpDir(); val tgtDir = tmpDir()
+      val base = versioned(240)
+        .select(($"id" % 40).as("a"), expr("id div 40").as("b"), $"ver", $"v").cache()
+      base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val sink = mkSink(tgtDir)
+      val cfg = versionedCfg(pk = Seq("a", "b"))
+      new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+      assertConverged(sink.read("t"), base)
+
+      val evolved = base.filter(!($"a" === 3 && $"b" === 2) && !($"a" === 17))
+        .withColumn("ver", when($"a" === 9, $"ver" + 1000L).otherwise($"ver"))
+        .withColumn("v", when($"a" === 9, concat($"v", lit("-u"))).otherwise($"v"))
+        .unionByName(Seq((3L, 99L, 5000L, "new")).toDF("a", "b", "ver", "v"))
+        .cache()
+      evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val rep = new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink)
+      rep.run()
+      assertConverged(sink.read("t"), evolved)
+      assert(rep.state.get("t").lastSeenVersion == 5000L)
+    }
   }
 
-  test("bucketed sink: syncUpdates = false converges the key set") {
-    val srcDir = tmpDir(); val tgtDir = tmpDir()
-    val base = versioned(200).cache()
-    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    val sink = new BucketedParquetStore(spark, tgtDir, 8)
-    new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink).run()
-
-    val evolved = base.filter($"id" % 7 =!= 2)
-      .unionByName(versioned(230).filter($"id" >= 200))
-      .cache()
-    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    new Replicator(spark, versionedCfg().copy(syncUpdates = false),
-      new ParquetStore(spark, srcDir), sink).run()
-
-    val keys = sink.read("t").select("id").as[Long].collect()
-    assert(keys.length == keys.distinct.length, "no duplicate keys")
-    assert(keys.toSet == evolved.select("id").as[Long].collect().toSet)
+  /** Flat parquet sink that logs the table of every `write` call. */
+  private class CountingStore(dir: String) extends ParquetStore(spark, dir) {
+    private var log = Vector.empty[String]
+    override def write(table: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      synchronized { log :+= table }
+      super.write(table, df)
+    }
+    /** Tables written since the last call, sorted. */
+    def takeWrites(): Seq[String] = synchronized { val w = log.sorted; log = Vector.empty; w }
   }
 
-  test("bucketed sink: a where-filtered table converges to the filtered source") {
+  test("flat sink: a change poll writes each table once, an idle poll writes nothing") {
     val srcDir = tmpDir(); val tgtDir = tmpDir()
-    val where = "v NOT LIKE 'x%'"
-    val base = versioned(300).cache()
-    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    val sink = new BucketedParquetStore(spark, tgtDir, 8)
-    val cfg = versionedCfg(where = Some(where))
-    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
-    assertConverged(sink.read("t"), base)
-
-    // one update leaves the filter, one stays inside it; inserts on
-    // both sides of the filter; deletes
-    val evolved = base.filter($"id" % 11 =!= 4)
-      .withColumn("ver", when($"id".isin(6L, 7L), lit(1000L) + $"id").otherwise($"ver"))
-      .withColumn("v", when($"id" === 6L, lit("x-out"))
-        .when($"id" === 7L, lit("still-in")).otherwise($"v"))
-      .unionByName(Seq((5000L, 2000L, "x-never"), (5001L, 2001L, "new"))
-        .toDF("id", "ver", "v"))
-      .cache()
-    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
-    assertConverged(sink.read("t"), evolved.filter(expr(where)))
-  }
-
-  test("bucketed sink: a composite-pk table converges under update, insert and delete") {
-    val srcDir = tmpDir(); val tgtDir = tmpDir()
-    val base = versioned(240)
+    val t = versioned(300).cache()
+    val c = versioned(240)
       .select(($"id" % 40).as("a"), expr("id div 40").as("b"), $"ver", $"v").cache()
-    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
-    val sink = new BucketedParquetStore(spark, tgtDir, 8)
-    val cfg = versionedCfg(pk = Seq("a", "b"))
-    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
-    assertConverged(sink.read("t"), base)
+    t.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    c.write.mode("overwrite").parquet(s"$srcDir/c.parquet")
+    val cfg = ReplicationConfig(tables = Seq(TableConfig("t", Seq("id"), "ver"),
+      TableConfig("c", Seq("a", "b"), "ver")), deleteChunkSize = 100)
+    val sink = new CountingStore(tgtDir)
+    def poll(): Replicator = {
+      val rep = new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink)
+      rep.run(); rep
+    }
+    poll()
+    assert(sink.takeWrites() == Seq("c", "t"))
 
-    val evolved = base.filter(!($"a" === 3 && $"b" === 2) && !($"a" === 17))
+    // each table: an insert, a value update and a delete
+    val t2 = t.filter($"id" =!= 150L)
+      .withColumn("ver", when($"id" === 20L, lit(900L)).otherwise($"ver"))
+      .unionByName(Seq((700L, 901L, "new")).toDF("id", "ver", "v")).cache()
+    val c2 = c.filter(!($"a" === 5 && $"b" === 1))
+      .withColumn("v", when($"a" === 9, lit("u")).otherwise($"v"))
       .withColumn("ver", when($"a" === 9, $"ver" + 1000L).otherwise($"ver"))
-      .withColumn("v", when($"a" === 9, concat($"v", lit("-u"))).otherwise($"v"))
-      .unionByName(Seq((3L, 99L, 5000L, "new")).toDF("a", "b", "ver", "v"))
+      .unionByName(Seq((3L, 99L, 5000L, "new")).toDF("a", "b", "ver", "v")).cache()
+    t2.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    c2.write.mode("overwrite").parquet(s"$srcDir/c.parquet")
+    val rep = poll()
+    assert(sink.takeWrites() == Seq("c", "t"), "one write per table per poll")
+    assertConverged(sink.read("t"), t2)
+    assertConverged(sink.read("c"), c2)
+    assert(rep.state.get("t").lastSeenVersion == 901L && rep.state.get("t").targetRows == 300L)
+    assert(rep.state.get("c").lastSeenVersion == 5000L && rep.state.get("c").targetRows == 240L)
+
+    poll()
+    assert(sink.takeWrites().isEmpty, "an idle poll writes nothing")
+    assertConverged(sink.read("t"), t2)
+  }
+
+  test("flat sink: an insert-only poll reloads no range from the source") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(200).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink = new ParquetStore(spark, tgtDir)
+    def poll(): Unit = new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink).run()
+    poll()
+
+    // an insert plus an in-place edit no watermark can see (same
+    // version): the one range covering the table must not be reloaded,
+    // so the edit stays unseen while the insert arrives via the pull
+    val edited = base.withColumn("v", when($"id" === 10L, lit("edited")).otherwise($"v"))
+    val inserted = edited.unionByName(Seq((500L, 500L, "new")).toDF("id", "ver", "v")).cache()
+    inserted.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    poll()
+    assertConverged(sink.read("t"), base.unionByName(Seq((500L, 500L, "new")).toDF("id", "ver", "v")))
+
+    // a delete flags the range: its reload brings the edit along
+    val deleted = inserted.filter($"id" =!= 20L).cache()
+    deleted.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    poll()
+    assertConverged(sink.read("t"), deleted)
+  }
+
+  test("flat sink: a String-keyed table converges after an insert, an update and a delete") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(100).select(format_string("sku-%04d", $"id").as("sku"), $"ver", $"v")
       .cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val cfg = versionedCfg(pk = Seq("sku"))
+    val sink = new ParquetStore(spark, tgtDir)
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+
+    val evolved = base.filter($"sku" =!= "sku-0007")
+      .withColumn("ver", when($"sku" === "sku-0003", lit(500L)).otherwise($"ver"))
+      .withColumn("v", when($"sku" === "sku-0003", lit("updated")).otherwise($"v"))
+      .unionByName(Seq(("sku-9999", 501L, "new")).toDF("sku", "ver", "v")).cache()
     evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
     val rep = new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink)
     rep.run()
     assertConverged(sink.read("t"), evolved)
-    assert(rep.state.get("t").lastSeenVersion == 5000L)
+    assert(rep.state.get("t").lastSeenVersion == 501L)
+  }
+
+  test("flat sink: a NULL-key row survives a delete sync in its table exactly once") {
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(200)
+      .unionByName(Seq((Option.empty[Long], 0L, "null-key")).toDF("id", "ver", "v")).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val cfg = versionedCfg().copy(deleteChunkSize = 100)
+    val sink = new ParquetStore(spark, tgtDir)
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+
+    // key 5 lives in range 0; the NULL key's range is NULL
+    val evolved = base.filter($"id".isNull || $"id" =!= 5L).cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
+    assertConverged(sink.read("t"), evolved)
+    assert(sink.read("t").filter($"id".isNull).count() == 1)
   }
 
   test("replicator: multi-table sync runs concurrently and converges both tables") {
