@@ -778,10 +778,6 @@ object Pipeline {
       .start()
   }
 
-  /** Assemble and run the configured pipeline; returns (rowsIn,
-    * rowsOut). The composed plan is written once at the end —
-    * partitioned by `shard` when a shard stage ran.
-    */
   /** Resolve the config's input into a frame. inputFormat "wet" points
     * `input` at WARC/WET crawl shards (graft.sources.Warc) instead of
     * a parquet table — raw Common Crawl dumps feed the same curation
@@ -813,6 +809,10 @@ object Pipeline {
     }
   }
 
+  /** Assemble and run the configured pipeline; returns (rowsIn,
+    * rowsOut). The composed plan is written once at the end —
+    * partitioned by `shard` when a shard stage ran.
+    */
   def run(spark: SparkSession, configJson: String): (Long, Long) = {
     val root = new ObjectMapper().readTree(configJson)
     def req(f: String): String =

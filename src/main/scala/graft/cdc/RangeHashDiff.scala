@@ -64,10 +64,8 @@ object RangeHashDiff {
     * |keys|/chunkSize rows, so this join is tiny relative to the data
     * (AQE broadcasts it when one side fits).
     */
-  def diffBuckets(source: DataFrame, target: DataFrame, pkCol: String, chunkSize: Long,
-                  ordered: Boolean = false): DataFrame =
-    divergent(bucketHashes(source, pkCol, chunkSize, ordered),
-      bucketHashes(target, pkCol, chunkSize, ordered))
+  def diffBuckets(source: DataFrame, target: DataFrame, pkCol: String, chunkSize: Long): DataFrame =
+    divergent(bucketHashes(source, pkCol, chunkSize), bucketHashes(target, pkCol, chunkSize))
 
   /** Full outer join of two per-bucket hash tables, keeping the buckets
     * whose hashes differ: `(bucket, src_keys, tgt_keys)`.

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -228,13 +228,12 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
   }
 
   /** Buckets a summary flags: key count or key-hash sum differ, or a
-    * source row passed the watermark. A NULL bucket is never flagged.
+    * source row passed the watermark.
     */
   private def flaggedBuckets(summary: Array[Row]): Seq[Long] = summary.filter { r =>
-    !r.isNullAt(r.fieldIndex("bucket")) && (
-      r.getAs[Long]("src_keys") != r.getAs[Long]("tgt_keys") ||
-        r.getAs[Long]("src_hash") != r.getAs[Long]("tgt_hash") ||
-        r.getAs[Long]("changed") > 0)
+    r.getAs[Long]("src_keys") != r.getAs[Long]("tgt_keys") ||
+      r.getAs[Long]("src_hash") != r.getAs[Long]("tgt_hash") ||
+      r.getAs[Long]("changed") > 0
   }.map(_.getAs[Long]("bucket")).toSeq
 
   private def total(summary: Array[Row], c: String): Long = summary.map(_.getAs[Long](c)).sum
@@ -311,17 +310,20 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     * a delete (or a change the batch missed) flags a bucket — against
     * the pre-upsert target every insert would flag and reload its range.
     * The rewrite is the upserted target with the flagged buckets swapped
-    * for their source rows; NULL-bucket rows (NULL range key) are never
-    * reloaded. Returns Σ source keys when it wrote.
+    * for their source rows. Returns Σ source keys when it wrote.
     */
   private def rewriteFlat(t: TableConfig, src: DataFrame,
                           batch: Option[DataFrame]): Option[Long] = {
     val pks = t.primaryKeys
     // contiguous value ranges of a single integral key (deletes.go:160);
-    // hash buckets of any other key, which a bigint cast would reject
+    // hash buckets of any other key, which a bigint cast would reject.
+    // A NULL key gets a bucket of its own, so the merge's unmatched NULL
+    // copies and a NULL row the source deleted are compared and reloaded
+    // like any other range (the sentinel meets a real key only at
+    // chunk size 1, key Long.MinValue: a reload copies the source anyway)
     val bucket = src.select(pks.map(col): _*).schema.map(_.dataType) match {
       case Seq(ByteType | ShortType | IntegerType | LongType) =>
-        RangeHashDiff.rangeBucket(pks.head, cfg.deleteChunkSize)
+        coalesce(RangeHashDiff.rangeBucket(pks.head, cfg.deleteChunkSize), lit(Long.MinValue))
       case _ => RangeHashDiff.hashBucket(pks, math.max(1, (cfg.deleteChunkSize / 16).toInt))
     }
     val tgt = sink.read(t.name)
@@ -333,7 +335,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     else {
       val srcCount = total(summary, "src_keys")
       val rows = if (flagged.isEmpty) upserted else {
-        val inFlagged = coalesce(bucket.isin(flagged: _*), lit(false))
+        val inFlagged = bucket.isin(flagged: _*)
         upserted.filter(!inFlagged).unionByName(src.filter(inFlagged))
       }
       sink.write(t.name, rows.repartition(chunkParts(srcCount), pks.map(col): _*))

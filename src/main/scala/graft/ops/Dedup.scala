@@ -369,23 +369,23 @@ object Dedup {
     * small (tens of pairs per thousand docs), so the pairs are
     * collected first: at most `LocalPairCap + 1` rows, read by one
     * task (one job on a materialized pair set). When at most
-    * `LocalPairCap` (10⁶) come back and the ids are Int, Long or
-    * String, union-find on the driver labels them exactly, instead of
-    * paying several Spark jobs per propagation round (the precedent
-    * is [[Graph.scc]]'s bounded `tarjanLocal` tail). Larger pair sets,
-    * or other id types, run the distributed [[minLabelComponents]]
-    * loop. `maxIter` bounds only that loop; the driver path is exact.
+    * `LocalPairCap` (10⁶) come back and both id columns are Int, Long
+    * or String of one type, union-find on the driver labels them
+    * exactly, instead of paying several Spark jobs per contraction
+    * round (the precedent is [[Graph.scc]]'s bounded `tarjanLocal`
+    * tail). Larger pair sets, and other or mixed id types, run
+    * [[connectedComponentsStar]].
     *
-    * The driver path reproduces the loop's converged output: String
-    * ids compare in UTF-8 byte order (Spark's `min`), a pair with a
-    * NULL endpoint links nothing and adds one (NULL, NULL) row,
-    * self-loops and repeated pairs change nothing, and the output
-    * schema is the loop's.
+    * The driver path reproduces the star's output: String ids compare
+    * in UTF-8 byte order (Spark's `min`), a pair with a NULL endpoint
+    * links nothing and adds one (NULL, NULL) row, self-loops and
+    * repeated pairs change nothing, and the output schema is the
+    * star's.
     *
     * Input: (id_a, id_b) pairs. Output: (id, cluster) for every vertex
     * that appears in at least one pair.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val ends = pairs.select(col("id_a"), col("id_b"))
     val (fa, fb) = (ends.schema("id_a"), ends.schema("id_b"))
     val local =
@@ -399,7 +399,7 @@ object Dedup {
         else Some(componentsLocal(pairs.sparkSession, rows,
           fa.copy(nullable = fa.nullable || fb.nullable)))
       }
-    local.getOrElse(minLabelComponents(pairs, maxIter))
+    local.getOrElse(connectedComponentsStar(pairs))
   }
 
   /** Most pairs [[connectedComponents]] resolves on the driver: 10⁶
@@ -461,57 +461,14 @@ object Dedup {
   private def distinctSorted[K: scala.reflect.ClassTag](a: Array[K]): Array[K] =
     a.indices.collect { case i if i == 0 || a(i) != a(i - 1) => a(i) }.toArray
 
-  /** Distributed connected components: iterative min-label
-    * propagation (the standard distributed CC: each round, every
-    * vertex takes the min of its own and its neighbors' labels;
-    * converges in O(component diameter) rounds — what
-    * GraphX/GraphFrames run under the hood). Each round is one join +
-    * one partial-aggregated groupBy plus a `count()` convergence
-    * probe; labels are truncated per round so lineage stays flat.
-    * [[connectedComponents]]' path for pair sets too large to collect.
-    */
-  private[graft] def minLabelComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // Lineage.truncate, NOT persist: persist caches data but keeps the
-    // logical plan, so per-iteration lineage compounds and Catalyst
-    // re-optimizes an exponentially growing plan on every action —
-    // optimizer time, not execution, becomes the bottleneck within a
-    // handful of rounds. Truncation is localCheckpoint by default;
-    // spark.graft.checkpointDir switches it to a reliable checkpoint
-    // that survives executor loss (see graft.util.Lineage).
-    // lazy truncation throughout this loop: each round's convergence
-    // probe (the count action below) is what materializes + caches the
-    // truncated frame, so the dedicated per-round checkpoint job
-    // disappears while the plan stays cut (results identical)
-    val edges = graft.util.Lineage.truncateLazy(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    var labels = graft.util.Lineage.truncateLazy(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("dst_label")), "dst")
-        .groupBy(col("src").as("id")).agg(min("dst_label").as("nbr_label"))
-      val stepped = graft.util.Lineage.truncateLazy(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("label"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("new_label")))
-      changed = stepped.filter(col("new_label") < col("label")).count()
-      labels = stepped.select(col("id"), col("new_label").as("label"))
-      i += 1
-    }
-    labels.withColumnRenamed("label", "cluster")
-  }
-
-  /** Star-contraction connected components — the O(log n)-round
-    * alternative for ADVERSARIAL graphs. Min-label propagation above
-    * needs O(component diameter) rounds: right for dup clusters (tiny
-    * diameter), hopeless for a 10⁶-long chain. Alternating
-    * large-star/small-star contraction (the classic MapReduce-CC
-    * construction, cf. Kiveris et al., "Connected Components in
-    * MapReduce and Beyond") halves long paths every round:
+  /** Star-contraction connected components — [[connectedComponents]]'
+    * distributed path, and the one to call directly on graphs of any
+    * shape. Label propagation needs O(component diameter) rounds:
+    * right for dup clusters (tiny diameter), hopeless for a 10⁶-long
+    * chain. Alternating large-star/small-star contraction (the classic
+    * MapReduce-CC construction, cf. Kiveris et al., "Connected
+    * Components in MapReduce and Beyond") halves long paths every
+    * round, so it converges in O(log n) rounds:
     *
     *  - large-star: every node links its LARGER neighbors to its
     *    smallest neighbor-or-self;
@@ -521,29 +478,30 @@ object Dedup {
     * Both steps are one groupBy(min) + one join — partial-aggregated,
     * shuffle-bounded by the live edge count, which shrinks as stars
     * collapse. Converges when the edge set is stable, at which point
-    * every edge is (vertex → component minimum).
+    * every edge is (vertex → component minimum). `maxIter` bounds the
+    * rounds.
     *
     * Same contract as [[connectedComponents]]: (id_a,id_b) pairs in,
-    * (id, cluster=component min id) out.
+    * (id, cluster=component min id) out. A pair with a NULL endpoint
+    * links nothing and adds one (NULL, NULL) row; a vertex seen only
+    * in self-loops labels itself.
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Convergence = this round's edge SET equals last round's. Compared
-    // by (count, xor of per-edge hashes) — an order-independent set
-    // checksum computed in ONE aggregation action per round, carrying
-    // the previous round's checksum forward instead of re-scanning
-    // `edges` with a count + anti-join (two extra actions per round).
-    // xor (not sum: ANSI long overflow) over a DISTINCT set never
-    // cancels, so checksum equality is set equality up to a ~2^-64
-    // hash collision — the standard fixpoint probe for iterative plans.
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).first()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    // lazy: the checksum probe right below is the materializing action
-    var edges = graft.util.Lineage.truncateLazy(pairs
+    // Lineage.truncateLazy, NOT persist: persist caches data but keeps
+    // the logical plan, so per-round lineage compounds and Catalyst
+    // re-optimizes a growing plan on every action (see graft.util.Lineage).
+    // The pairs are cut ONCE: the edge set and the vertex set below both
+    // read this frame, so the pair search upstream runs once, not three
+    // times. Lazy: the first checksum probe materializes it.
+    val ends = graft.util.Lineage.truncateLazy(pairs.select(col("id_a"), col("id_b")))
+    // Convergence = this round's edge SET equals last round's, by
+    // Graph.setChecksum (count, xor of per-edge hashes) — one
+    // aggregation action per round, the previous round's checksum
+    // carried forward instead of re-scanning `edges`.
+    var edges = graft.util.Lineage.truncateLazy(ends
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u") =!= col("v")).distinct())
-    var prevChk = checksum(edges)
+    var prevChk = Graph.setChecksum(edges, "u", "v")
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -560,15 +518,15 @@ object Dedup {
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(minsS.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()) // truncate lineage per round (see above)
-      val chk = checksum(e2)
+        .filter(col("u") =!= col("v")).distinct())
+      val chk = Graph.setChecksum(e2, "u", "v")
       converged = chk == prevChk
       prevChk = chk
       edges = e2
       i += 1
     }
-    val verts = pairs.select(col("id_a").as("id"))
-      .unionByName(pairs.select(col("id_b").as("id"))).distinct()
+    val verts = ends.select(col("id_a").as("id"))
+      .unionByName(ends.select(col("id_b").as("id"))).distinct()
     verts.join(edges.select(col("u").as("id"), col("v").as("cluster")), Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
   }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * `dst` with partial-aggregated sums (map-side combine collapses
   * hot destinations before the wire), then a |V|-row left join back
   * to the node set for teleport mass. The rank frontier is
-  * `localCheckpoint`ed every round — same lineage-truncation
-  * discipline as [[Dedup.minLabelComponents]] — so the plan stays
+  * `localCheckpoint`ed every round — the lineage-truncation
+  * discipline of [[graft.util.Lineage]] — so the plan stays
   * O(1) per round instead of growing with the iteration count. The
   * edge list is read once per iteration from its (cached upstream or
   * on-disk) source; at cluster scale you'd persist it bucketed by

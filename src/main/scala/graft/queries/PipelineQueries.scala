@@ -75,8 +75,8 @@ object PipelineQueries {
   /** Duplicate clustering: a 4-copy corpus (every 50th doc duplicated
     * at +100k/+200k/+300k) whose dup-pair graph is built as CHAIN
     * edges (consecutive ids per content hash, via window lag) — so the
-    * component diameter is ≥ 3 and label propagation must actually
-    * iterate. The oracle derives cluster truth independently:
+    * component diameter is ≥ 3 and one hop of labelling is not enough.
+    * The oracle derives cluster truth independently:
     * cluster = min(doc_id) per content-hash group of size > 1.
     */
   def dedupClustersQ(spark: SparkSession, sfDir: String): DataFrame = {
@@ -97,8 +97,9 @@ object PipelineQueries {
   }
 
   /** Same dup-pair graph and cluster truth as `dedup_clusters`, solved
-    * by star contraction instead of label propagation — the two CC
-    * algorithms must agree bit-for-bit against the same oracle.
+    * by distributed star contraction instead of the driver union-find
+    * `connectedComponents` runs on a pair set this small — the two CC
+    * paths must agree bit-for-bit against the same oracle.
     */
   def dedupClustersStarQ(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -124,7 +125,7 @@ object PipelineQueries {
     * connectedComponents — the ANN↔dedup loop closed, r15 verdict
     * #4): every 50th vector is planted again at +100000, mutual
     * nnDescent k-NN edges with verified cosine ≥ COS_T become the
-    * dup-pair graph, and min-label CC assigns each near-dup its
+    * dup-pair graph, and connected components assign each near-dup its
     * keeper. Pairs are subset-of-exact by construction (the spec pins
     * it against `dedup_embedding` truth); the oracle replays the
     * whole chain — nnDescent build, mutuality, threshold, and CC as a
@@ -147,7 +148,7 @@ object PipelineQueries {
     * are the insert beam-search's own connections — zero rebuild),
     * half the plants then LEAVE via delete(), and the sweep reads the
     * persisted edges — mutual, both ends live, exact-cosine ≥ T →
-    * min-label CC. O(edges); the oracle replays seed build, insert
+    * connected components. O(edges); the oracle replays seed build, insert
     * search, edge connection, mutuality, tombstone mask, threshold,
     * and CC as one chain, so any divergence in the persisted dup path
     * hash-fails.
@@ -5572,7 +5573,7 @@ object PipelineQueries {
     // winnow pairs replayed as in dedup_winnow, then the connected
     // components via a recursive reachability CTE (cluster = min id
     // reachable over the undirected pair graph — exactly what
-    // min-label propagation converges to), then the keeper anti-join
+    // connectedComponents returns), then the keeper anti-join
     "pipeline_winnow_corpus" ->
       s"""WITH RECURSIVE corpus AS (
          |  SELECT doc_id, lang, n_chars, text FROM documents WHERE doc_id % 20 = 0

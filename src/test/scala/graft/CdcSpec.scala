@@ -490,21 +490,44 @@ class CdcSpec extends SparkSpec {
     assert(rep.state.get("t").lastSeenVersion == 501L)
   }
 
-  test("flat sink: a NULL-key row survives a delete sync in its table exactly once") {
+  private def nullKeyRow(ver: Long, v: String) =
+    Seq((Option.empty[Long], ver, v)).toDF("id", "ver", "v")
+
+  /** A flat-sink table of 200 keyed rows plus one NULL-key row, synced,
+    * then `evolve`d at the source and polled once more: asserts the
+    * target converged and returns it. */
+  private def nullKeyPoll(evolve: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val srcDir = tmpDir(); val tgtDir = tmpDir()
-    val base = versioned(200)
-      .unionByName(Seq((Option.empty[Long], 0L, "null-key")).toDF("id", "ver", "v")).cache()
+    val base = versioned(200).unionByName(nullKeyRow(0L, "null-key")).cache()
     base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
     val cfg = versionedCfg().copy(deleteChunkSize = 100)
     val sink = new ParquetStore(spark, tgtDir)
     new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
 
-    // key 5 lives in range 0; the NULL key's range is NULL
-    val evolved = base.filter($"id".isNull || $"id" =!= 5L).cache()
+    val evolved = evolve(base).cache()
     evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
     new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
     assertConverged(sink.read("t"), evolved)
-    assert(sink.read("t").filter($"id".isNull).count() == 1)
+    sink.read("t")
+  }
+
+  test("flat sink: a NULL-key row survives a delete sync in its table exactly once") {
+    // key 5 lives in range 0; the NULL key has a range of its own
+    val tgt = nullKeyPoll(_.filter($"id".isNull || $"id" =!= 5L))
+    assert(tgt.filter($"id".isNull).count() == 1)
+  }
+
+  test("flat sink: an updated NULL-key row is replaced, not appended") {
+    // the update passes the watermark, but the merge cannot match a NULL key
+    val tgt = nullKeyPoll(_ => versioned(200).unionByName(nullKeyRow(500L, "null-key-updated")))
+    assert(tgt.filter($"id".isNull).select($"v").as[String].collect().toSeq ==
+      Seq("null-key-updated"))
+  }
+
+  test("flat sink: a NULL-key row deleted at the source leaves the target") {
+    val tgt = nullKeyPoll(_.filter($"id".isNotNull))
+    assert(tgt.filter($"id".isNull).isEmpty)
   }
 
   test("replicator: multi-table sync runs concurrently and converges both tables") {

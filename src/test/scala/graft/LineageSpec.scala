@@ -29,12 +29,10 @@ class LineageSpec extends SparkSpec {
     def runAll(): Seq[Set[String]] = Seq(
       Dedup.connectedComponents(pairs).as[(Long, Long)].collect()
         .map(_.toString).toSet,
-      // the distributed loop connectedComponents runs on large pair sets
-      Dedup.minLabelComponents(pairs).as[(Long, Long)].collect()
-        .map(_.toString).toSet,
       // materializes its input once, then the pairs, then components
       Dedup.dedupedCorpus(docs, "text", "doc_id").collect()
         .map(_.toString).toSet,
+      // the distributed path connectedComponents runs on large pair sets
       Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect()
         .map(_.toString).toSet,
       Graph.pageRank(nodes, edges, iters = 3).as[(Long, Long)].collect()

@@ -1984,6 +1984,19 @@ class PipelineSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L))
   }
 
+  test("star connected components evaluate each input pair once") {
+    // every evaluation of the pair frame's id_a bumps the accumulator:
+    // the edge set and the vertex set must share one read of the input
+    val evals = spark.sparkContext.longAccumulator("cc_pair_evals")
+    val counted = udf { (x: Long) => evals.add(1); x }
+    val n = 300
+    val pairs = spark.range(n).repartition(4)
+      .select(counted($"id" % 97).as("id_a"), ($"id" * 7 % 131 + 50).as("id_b"))
+    val cc = Dedup.connectedComponentsStar(pairs)
+    assert(cc.count() > 0)
+    assert(evals.sum == n, s"${evals.sum} evaluations of $n pair rows")
+  }
+
   test("connected components of a small pair set start at most 2 Spark jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // a materialized 100-pair set over 8 partitions, the shape
@@ -2014,7 +2027,7 @@ class PipelineSpec extends SparkSpec {
     } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
     val started = jobs.toArray.count(_ == "cc_pin")
     assert(started <= 2, s"connectedComponents started $started jobs")
-    assert(cc.schema == Dedup.minLabelComponents(pairs).schema)
+    assert(cc.schema == Dedup.connectedComponentsStar(pairs).schema)
     assert(cc.count() == pairs.select($"id_a".as("v"))
       .union(pairs.select($"id_b")).distinct().count())
   }

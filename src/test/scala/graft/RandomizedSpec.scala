@@ -95,26 +95,28 @@ class RandomizedSpec extends SparkSpec {
     assert(finalGot == truth)
   }
 
-  test("star-contraction CC matches union-find on random graphs and deep chains") {
-    // naive union-find reference
-    def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.map(k => k -> find(k)).toMap
+  /** Naive union-find reference: each vertex labelled with its
+    * component's least id. */
+  private def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  test("star-contraction CC matches union-find on random graphs and deep chains") {
     val rnd = new Random(1234)
     (1 to rounds).foreach { _ =>
       val random = Seq.fill(rnd.nextInt(300) + 10)(
         (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
         .filter(e => e._1 != e._2)
-      // a depth-200 chain: min-label propagation with maxIter=20 would
+      // a depth-200 chain: label propagation capped at 20 rounds would
       // truncate; star contraction must converge in ~log2(200) rounds
       val base = 10000L
       val chain = (0L until 200L).map(i => (base + i, base + i + 1))
@@ -126,6 +128,24 @@ class RandomizedSpec extends SparkSpec {
       // the chain's far end must carry the chain-head label — the
       // multi-hop case a bounded label propagation gets wrong
       assert(got(base + 200L) == base)
+    }
+  }
+
+  test("connected components of a deep chain off the driver path reach the chain head") {
+    // Short ids, and Int/Long columns, skip the driver union-find: a
+    // depth-200 chain then needs every hop, which a round-capped
+    // label propagation stops short of
+    val chain = (0L until 200L).map(i => (i, i + 1)) ++ Seq((300L, 301L), (302L, 302L))
+    val expect = ufComponents(chain)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.get(0).asInstanceOf[Number].longValue ->
+        r.get(1).asInstanceOf[Number].longValue).toMap
+    val shorts = chain.map { case (a, b) => (a.toShort, b.toShort) }.toDF("id_a", "id_b")
+    val mixed = chain.map { case (a, b) => (a.toInt, b) }.toDF("id_a", "id_b")
+    Seq("Short" -> shorts, "Int/Long" -> mixed).foreach { case (name, df) =>
+      val got = labels(Dedup.connectedComponents(df))
+      assert(got(200L) == 0L, name)
+      assert(got == expect, name)
     }
   }
 
@@ -166,10 +186,10 @@ class RandomizedSpec extends SparkSpec {
       val expect = reference(pairs, lt)
       val driver = Dedup.connectedComponents(df)
       assert(labels(driver) == expect, "driver path")
-      // maxIter high enough that the loop converges on any of these
-      val loop = Dedup.minLabelComponents(df, maxIter = 1000)
-      assert(labels(loop) == expect, "distributed loop")
-      assert(driver.schema == loop.schema)
+      // the distributed path connectedComponents takes on large pair sets
+      val star = Dedup.connectedComponentsStar(df)
+      assert(labels(star) == expect, "star contraction")
+      assert(driver.schema == star.schema)
     }
     val rnd = new Random(2024)
     (1 to 2).foreach { _ =>
