@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, IsNotNull}
 import org.apache.spark.sql.functions._
 
 /** Upsert/apply semantics — the Spark-native form of sslr's
@@ -13,17 +14,35 @@ import org.apache.spark.sql.functions._
   * newest row, rows absent from updates survive unchanged.
   *
   * Scale: one shuffle of each side on the PK. When the target is
-  * parquet bucketed by PK (see Replicator), the base side's shuffle is
-  * avoided entirely; the anti join also benefits from AQE converting to
-  * broadcast when the update batch is small — the common CDC case.
+  * parquet bucketed by PK (see Replicator) and the batch's key cannot
+  * be NULL, the base side's shuffle is avoided; the anti join also
+  * benefits from AQE converting to broadcast when the update batch is
+  * small — the common CDC case.
   */
 object Merge {
 
   /** Apply `updates` to `base` by primary key (last-writer-wins). */
   def upsert(base: DataFrame, updates: DataFrame, pkCols: Seq[String]): DataFrame = {
     require(pkCols.nonEmpty, "upsert needs at least one primary-key column")
-    val survivors = base.join(updates.select(pkCols.map(col): _*), pkCols, "left_anti")
-    updates.unionByName(survivors)
+    updates.unionByName(withoutKeys(base, updates, pkCols))
+  }
+
+  /** `base` without the rows whose key a `keys` row holds, matched
+    * null-safely: a NULL key is one row identity. Where `keys` provably
+    * holds no NULL (declared or filtered non-null) `===` is the same
+    * match, and the only one that joins a base bucketed on the key in
+    * place (Spark plans `<=>` on `coalesce(key)`, reshuffling the base).
+    * The keys are aliased: base and batch often share lineage.
+    */
+  private def withoutKeys(base: DataFrame, keys: DataFrame, pkCols: Seq[String]): DataFrame = {
+    val k = keys.select(pkCols.map(c => col(c).as(s"__key_$c")): _*)
+    val plan = k.queryExecution.optimizedPlan
+    val nonNull = plan.constraints.collect { case IsNotNull(a: Attribute) => a.exprId }
+    val matches = pkCols.zip(plan.output).map { case (c, a) =>
+      val (l, r) = (base(c), k(a.name))
+      if (a.nullable && !nonNull.contains(a.exprId)) l <=> r else l === r
+    }
+    base.join(k, matches.reduce(_ && _), "left_anti")
   }
 
   /** Collapse a change batch to ONE row per PK, keeping the highest
@@ -56,5 +75,5 @@ object Merge {
     * (reference: deleteRows, updates.go:228).
     */
   def applyDeletes(target: DataFrame, deletedKeys: DataFrame, pkCols: Seq[String]): DataFrame =
-    target.join(deletedKeys.select(pkCols.map(col): _*), pkCols, "left_anti")
+    withoutKeys(target, deletedKeys, pkCols)
 }

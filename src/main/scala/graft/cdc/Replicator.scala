@@ -317,9 +317,9 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     val pks = t.primaryKeys
     // contiguous value ranges of a single integral key (deletes.go:160);
     // hash buckets of any other key, which a bigint cast would reject.
-    // A NULL key gets a bucket of its own, so the merge's unmatched NULL
-    // copies and a NULL row the source deleted are compared and reloaded
-    // like any other range (the sentinel meets a real key only at
+    // A NULL key gets a bucket of its own, so a NULL-key row the source
+    // deleted is compared and reloaded like any other range (the merge
+    // replaces an updated one; the sentinel meets a real key only at
     // chunk size 1, key Long.MinValue: a reload copies the source anyway)
     val bucket = src.select(pks.map(col): _*).schema.map(_.dataType) match {
       case Seq(ByteType | ShortType | IntegerType | LongType) =>

@@ -1,9 +1,8 @@
 package graft.cdc
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 
 /** Per-table replication state — the Spark-native form of sslr's
   * `__sslr_state` table (reference: internal/state.go).
@@ -24,10 +23,25 @@ import org.apache.spark.sql.types._
   * checkpoint log, and like it one writer PROCESS per state path.
   *
   * The log self-compacts past `compactAfter` files (latest-per-table
-  * rewritten as one file) so reads stay a single-file scan.
+  * rewritten as one file), so it never holds more than `compactAfter`
+  * + 1 files of a few records each. It is therefore read on the
+  * driver — one listing and a Jackson parse per file, no Spark job —
+  * and a line that does not parse fails the read, naming its file.
   */
 class StateStore(spark: SparkSession, path: String) {
   private val compactAfter = 64
+
+  private val mapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  private def isLog(name: String): Boolean = name.startsWith("log-") && name.endsWith(".json")
+
+  /** Every entry of the state dir (none when it does not exist). */
+  private def listing(): Seq[Path] = {
+    val f = graft.util.Fs.fs(spark, path)
+    val p = new Path(path)
+    if (f.exists(p)) f.listStatus(p).map(_.getPath).toSeq else Nil
+  }
 
   // seq: strictly increasing within this process. Seeded from
   // max(existing log seq, ms-epoch base): the clock base alone keeps a
@@ -37,55 +51,59 @@ class StateStore(spark: SparkSession, path: String) {
   // silently superseded. File names carry their seq, so the existing
   // max is one listing, no scan.
   private val seq = new java.util.concurrent.atomic.AtomicLong({
-    val f = graft.util.Fs.fs(spark, path)
-    val p = new Path(path)
-    val maxExisting =
-      if (!f.exists(p)) 0L
-      else f.listStatus(p).map(_.getPath.getName)
-        .filter(n => n.startsWith("log-") && n.endsWith(".json"))
-        .flatMap(_.stripPrefix("log-").takeWhile(_ != '-').toLongOption)
-        .foldLeft(0L)(math.max)
+    val maxExisting = listing().map(_.getName).filter(isLog)
+      .flatMap(_.stripPrefix("log-").takeWhile(_ != '-').toLongOption)
+      .foldLeft(0L)(math.max)
     math.max(System.currentTimeMillis() * 1000000L, maxExisting)
   })
 
-  private val schema = StructType(Seq(
-    StructField("table_name", StringType, nullable = false),
-    StructField("last_seen_version", LongType, nullable = true),
-    StructField("where_clause", StringType, nullable = true),
-    StructField("target_rows", LongType, nullable = true),
-    StructField("seq", LongType, nullable = false)))
+  /** The log files; refuses a legacy state dir. */
+  private def logFiles(): Seq[Path] = {
+    val entries = listing()
+    // a pre-append-log state dir held a rewritten PARQUET table;
+    // reading it as a log finds no record, every watermark reads as 0,
+    // and the next cycle silently degrades to full copies — refuse
+    if (entries.exists(_.getName.endsWith(".parquet")))
+      throw new IllegalStateException(
+        s"$path holds parquet files — a legacy (pre-append-log) state " +
+          "table, not a JSON log. Migrate it: read the old state, " +
+          "put() it into a fresh path, and point the store there.")
+    entries.filter(p => isLog(p.getName))
+  }
 
-  private def log(): DataFrame =
-    if (graft.util.Fs.existsNonEmpty(spark, path)) {
-      // a pre-append-log state dir held a rewritten PARQUET table;
-      // reading it as JSON parses nothing, every watermark reads as 0,
-      // and the next cycle silently degrades to full copies — refuse
-      if (graft.util.Fs.hasFileWithSuffix(spark, path, ".parquet"))
-        throw new IllegalStateException(
-          s"$path holds parquet files — a legacy (pre-append-log) state " +
-            "table, not a JSON log. Migrate it: read the old state, " +
-            "put() it into a fresh path, and point the store there.")
-      spark.read.schema(schema).json(path)
-    } else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  private case class Record(table: String, version: Option[Long], where: Option[String],
+                            rows: Option[Long], seq: Long)
 
-  /** Latest state per table (the logical `__sslr_state` view):
-    * per-field latest non-null record. struct-max aggregation is
-    * partial-aggregatable and skips nulls, so this stays one tiny
-    * shuffle however many appends accumulated between compactions.
-    */
-  def stateTable(): DataFrame =
-    log().groupBy("table_name")
-      .agg(
-        max(when(col("last_seen_version").isNotNull,
-          struct(col("seq"), col("last_seen_version")))).as("mv"),
-        max(when(col("where_clause").isNotNull,
-          struct(col("seq"), col("where_clause")))).as("mw"),
-        max(when(col("target_rows").isNotNull,
-          struct(col("seq"), col("target_rows")))).as("mr"))
-      .select(col("table_name"),
-        coalesce(col("mv.last_seen_version"), lit(0L)).as("last_seen_version"),
-        coalesce(col("mw.where_clause"), lit("")).as("where_clause"),
-        coalesce(col("mr.target_rows"), lit(-1L)).as("target_rows"))
+  private def parse(file: Path, line: String): Record =
+    try {
+      val n = mapper.readTree(line)
+      def field(name: String, ok: JsonNode => Boolean): Option[JsonNode] =
+        Option(n.get(name)).filterNot(_.isNull).map { v => require(ok(v), s"bad $name"); v }
+      def long(name: String) = field(name, _.isIntegralNumber).map(_.asLong)
+      def text(name: String) = field(name, _.isTextual).map(_.textValue)
+      Record(text("table_name").get, long("last_seen_version"), text("where_clause"),
+        long("target_rows"), long("seq").get)
+    } catch {
+      case e: Exception => throw new IllegalStateException(
+        s"unreadable state log file $file (fix or remove it): $line", e)
+    }
+
+  /** Per table, the highest-seq non-null value of each field in `files`. */
+  private def latest(files: Seq[Path]): Map[String, TableState] = {
+    val f = graft.util.Fs.fs(spark, path)
+    val records = files.flatMap { p =>
+      val in = f.open(p)
+      try new String(in.readAllBytes(), "UTF-8").split('\n').toSeq.filter(_.trim.nonEmpty)
+        .map(parse(p, _))
+      finally in.close()
+    }
+    records.groupBy(_.table).map { case (table, rs) =>
+      def last[T](get: Record => Option[T]): Option[T] =
+        rs.flatMap(r => get(r).map(r.seq -> _)).maxByOption(_._1).map(_._2)
+      table -> TableState(last(_.version).getOrElse(0L), last(_.where).getOrElse(""),
+        last(_.rows).getOrElse(-1L))
+    }
+  }
 
   /** `targetRows` < 0 = unknown (never recorded): the fullCopy decision
     * then falls back to counting the target — on a large object-store
@@ -99,42 +117,26 @@ class StateStore(spark: SparkSession, path: String) {
   /** Every table's current state in ONE read of the log — what a
     * replication cycle reads up front instead of a lookup per table.
     */
-  // all() holds the read lock across the collect: compaction deletes
+  // all() holds the read lock across the scan: compaction deletes
   // superseded log files, and an unlocked concurrent reader could list
-  // a file that vanishes before its scan task opens it. (stateTable()
-  // is lazy — callers running their own actions on it should not race
-  // a writer; the Replicator only reads through all() and get().)
+  // a file that vanishes before it is opened.
   def all(): Map[String, TableState] = {
     val rl = lock.readLock()
     rl.lock()
-    try stateTable().collect().map { r =>
-      r.getString(0) -> TableState(r.getLong(1), Option(r.getString(2)).getOrElse(""), r.getLong(3))
-    }.toMap
+    try latest(logFiles())
     finally rl.unlock()
   }
 
   /** One table's current state (empty if never recorded). */
   def get(table: String): TableState = all().getOrElse(table, TableState(0L, ""))
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def record(table: String, version: Option[Long], where: Option[String],
                      rows: Option[Long], s: Long): String = {
-    val fields = Seq(s"""\"table_name\": ${jsonStr(table)}""") ++
-      version.map(v => s"""\"last_seen_version\": $v""") ++
-      where.map(w => s"""\"where_clause\": ${jsonStr(w)}""") ++
-      rows.map(r => s"""\"target_rows\": $r""") ++
-      Seq(s"""\"seq\": $s""")
-    fields.mkString("{", ", ", "}\n")
+    val n = mapper.createObjectNode().put("table_name", table)
+    version.foreach(n.put("last_seen_version", _))
+    where.foreach(n.put("where_clause", _))
+    rows.foreach(n.put("target_rows", _))
+    mapper.writeValueAsString(n.put("seq", s)) + "\n"
   }
 
   /** Create one uniquely-named log file atomically (write hidden tmp,
@@ -197,33 +199,25 @@ class StateStore(spark: SparkSession, path: String) {
   // Compaction is the one operation that rewrites the log dir. It runs
   // under the write lock (no append can be in flight) and is rare —
   // tryLock: if writers are busy, skip and let a later append compact.
-  private def maybeCompact(): Unit = {
-    def logFiles(): Int = {
-      val f = graft.util.Fs.fs(spark, path)
-      val p = new Path(path)
-      if (f.exists(p)) f.listStatus(p).count(_.getPath.getName.endsWith(".json")) else 0
-    }
-    if (logFiles() > compactAfter) {
+  private def maybeCompact(): Unit =
+    if (listing().count(p => isLog(p.getName)) > compactAfter) {
       val wl = lock.writeLock()
       if (wl.tryLock()) {
-        try if (logFiles() > compactAfter) {
-          val f = graft.util.Fs.fs(spark, path)
-          val olds = f.listStatus(new Path(path))
-            .filter(_.getPath.getName.endsWith(".json")).map(_.getPath)
-          val latest = stateTable().collect()
-          val s = seq.incrementAndGet()
-          val lines = latest.map { r =>
-            record(r.getString(0), Some(r.getLong(1)),
-              Some(Option(r.getString(2)).getOrElse("")),
-              Some(r.getLong(3)).filter(_ >= 0), s)
-          }.mkString
-          // write the compacted file FIRST, then drop the superseded
-          // ones — a crash in between leaves duplicates (harmless:
-          // latest-seq wins), never lost state
-          writeLogFile(lines, s)
-          olds.foreach(p => f.delete(p, false))
+        try {
+          val olds = logFiles()
+          if (olds.size > compactAfter) {
+            val s = seq.incrementAndGet()
+            val lines = latest(olds).map { case (t, st) =>
+              record(t, Some(st.lastSeenVersion), Some(st.whereClause), Some(st.targetRows), s)
+            }.mkString
+            // write the compacted file FIRST, then drop the superseded
+            // ones — a crash in between leaves duplicates (harmless:
+            // latest-seq wins), never lost state
+            writeLogFile(lines, s)
+            val f = graft.util.Fs.fs(spark, path)
+            olds.foreach(f.delete(_, false))
+          }
         } finally wl.unlock()
       }
     }
-  }
 }

@@ -313,15 +313,18 @@ class CdcSpec extends SparkSpec {
   for ((kind, mkSink) <- sinkKinds) {
     test(s"$kind: syncDeletes = false applies updates and keeps deleted rows") {
       val srcDir = tmpDir(); val tgtDir = tmpDir()
-      val base = versioned(200).cache()
+      val base = versioned(200).unionByName(nullKeyRow(0L, "null-key")).cache()
       base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
       val sink = mkSink(tgtDir)
       val cfg = versionedCfg().copy(syncDeletes = false)
       new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
 
-      val evolved = base.filter($"id" % 10 =!= 3)
-        .withColumn("ver", when($"id" === 5L, lit(900L)).otherwise($"ver"))
-        .withColumn("v", when($"id" === 5L, lit("updated")).otherwise($"v"))
+      // the NULL-key row is updated too: its old copy must not stay
+      val evolved = base.filter($"id".isNull || $"id" % 10 =!= 3)
+        .withColumn("ver", when($"id" === 5L, lit(900L))
+          .when($"id".isNull, lit(901L)).otherwise($"ver"))
+        .withColumn("v", when($"id" === 5L, lit("updated"))
+          .when($"id".isNull, lit("null-key-updated")).otherwise($"v"))
         .cache()
       evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
       new Replicator(spark, cfg, new ParquetStore(spark, srcDir), sink).run()
@@ -519,7 +522,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("flat sink: an updated NULL-key row is replaced, not appended") {
-    // the update passes the watermark, but the merge cannot match a NULL key
+    // the update passes the watermark; the merge matches its NULL key
     val tgt = nullKeyPoll(_ => versioned(200).unionByName(nullKeyRow(500L, "null-key-updated")))
     assert(tgt.filter($"id".isNull).select($"v").as[String].collect().toSeq ==
       Seq("null-key-updated"))
@@ -824,7 +827,8 @@ class CdcSpec extends SparkSpec {
   test("state store: 16 concurrent writers lose nothing, compaction included") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val store = new StateStore(spark, s"${tmpDir()}/state")
+    val dir = s"${tmpDir()}/state"
+    val store = new StateStore(spark, dir)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
@@ -841,7 +845,9 @@ class CdcSpec extends SparkSpec {
       assert(st.lastSeenVersion == 500L + t, s"t$t watermark lost: $st")
       assert(st.whereClause == s"w$t", s"t$t where lost: $st")
     }
-    assert(store.stateTable().count() == 16)
+    assert(store.all().size == 16)
+    val logs = new java.io.File(dir).list().count(n => n.startsWith("log-") && n.endsWith(".json"))
+    assert(logs <= 65, s"$logs log files after 96 appends: compaction must bound the log")
   }
 
   test("replicator: 16 tables sync concurrently with no lost watermark") {
@@ -899,7 +905,81 @@ class CdcSpec extends SparkSpec {
     assert(store.get("t2").lastSeenVersion == 7L)
     store.setVersion("t1", 43L)
     assert(store.get("t1").lastSeenVersion == 43L)
-    assert(store.stateTable().count() == 2)
+    assert(store.all().size == 2)
+    // quotes, a backslash, control characters and non-ASCII text
+    val where = "a = \"q\" AND b LIKE 'x\\y'\n\tAND c = '\u0001' AND d = 'é漢字'"
+    store.setWhere("t2", where)
+    assert(store.get("t2") == store.TableState(7L, where))
+  }
+
+  /** Number of Spark jobs `f` starts on this thread. */
+  private def jobsStartedBy(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("probe", "probe", interruptOnCancel = false)
+      f
+      // the listener bus is asynchronous and ordered: once a later
+      // marker job is seen, every job `f` started has been too
+      sc.setJobGroup("marker", "marker", interruptOnCancel = false)
+      sc.parallelize(0 until 1, 1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(jobs.contains("marker"))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    jobs.toArray.count(_ == "probe")
+  }
+
+  test("state store: reads and compaction start no Spark job") {
+    val dir = s"${tmpDir()}/state"
+    val store = new StateStore(spark, dir)
+    (1 to 64).foreach(i => store.setVersion(s"t${i % 4}", i.toLong))
+    def logs() = new java.io.File(dir).list().count(_.endsWith(".json"))
+    assert(logs() == 64)
+    val started = jobsStartedBy {
+      assert(store.all().size == 4)
+      assert(store.get("t1").lastSeenVersion == 61L)
+      store.setTargetRows("t1", 10L) // the 65th file: compacts the log
+    }
+    assert(logs() == 1, "the append must have compacted the log")
+    assert(store.get("t1") == store.TableState(61L, "", 10L))
+    assert(started == 0, s"$started Spark jobs")
+  }
+
+  test("state store: a compacted multi-record log file reads back") {
+    // a compacted file as earlier versions wrote it, byte for byte
+    val dir = s"${tmpDir()}/state"
+    new java.io.File(dir).mkdirs()
+    def write(name: String, content: String): Unit =
+      Files.write(new java.io.File(dir, name).toPath, content.getBytes("UTF-8"))
+    write("log-100-0a1b2c3d.json",
+      "{\"table_name\": \"t\", \"last_seen_version\": 5, " +
+        "\"where_clause\": \"a = \\\"q\\\"\\n\\u0001\", \"target_rows\": 10, \"seq\": 100}\n" +
+        "{\"table_name\": \"u\", \"last_seen_version\": 7, \"where_clause\": \"\", \"seq\": 100}\n")
+    write("log-101-4e5f6a7b.json", """{"table_name": "t", "last_seen_version": 6, "seq": 101}""" + "\n")
+    val store = new StateStore(spark, dir)
+    assert(store.all() == Map(
+      "t" -> store.TableState(6L, "a = \"q\"\n\u0001", 10L),
+      "u" -> store.TableState(7L, "", -1L)))
+    store.setVersion("u", 8L)
+    assert(store.get("u").lastSeenVersion == 8L)
+  }
+
+  test("state store: a log line that does not parse fails the read, naming its file") {
+    val dir = s"${tmpDir()}/state"
+    val store = new StateStore(spark, dir)
+    store.setVersion("t", 5L)
+    val bad = new java.io.File(dir, "log-1-deadbeef.json")
+    Files.write(bad.toPath, "{\"table_name\": \"t\", \"last_se\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](store.get("t"))
+    assert(e.getMessage.contains("log-1-deadbeef.json"), e.getMessage)
   }
 
   test("schema sync: ddl rendering and drift policy") {
@@ -941,6 +1021,15 @@ class CdcSpec extends SparkSpec {
     val upd = Seq((2L, "B"), (4L, "D")).toDF("id", "v")
     val out = Merge.upsert(base, upd, Seq("id")).as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
+
+    // a NULL key is one key: its update replaces the old row, its
+    // delete removes it
+    val nBase = Seq((Some(1L), "a"), (None, "n")).toDF("id", "v")
+    val nUpd = Seq((Option.empty[Long], "N")).toDF("id", "v")
+    assert(Merge.upsert(nBase, nUpd, Seq("id")).as[(Option[Long], String)].collect().toSet ==
+      Set((Some(1L), "a"), (None, "N")))
+    assert(Merge.applyDeletes(nBase, nUpd, Seq("id")).as[(Option[Long], String)].collect().toSeq ==
+      Seq((Some(1L), "a")))
   }
 
   test("latestByKey collapses a multi-row change batch to the highest version per PK") {
