@@ -114,13 +114,14 @@ object AggMaintain {
 
   /** The base rows a change batch replaces or deletes — the retract
     * side of [[deltas]]. Pruned read: pk semi-join against the batch's
-    * keys, broadcast unless the caller says the batch is huge.
+    * keys, broadcast unless the caller says the batch is huge; keys
+    * match null-safely, as [[Merge.upsert]] replaces them.
     */
   def replacedRows(base: DataFrame, upserts: DataFrame, deleteKeys: DataFrame,
                    pkCols: Seq[String], broadcastKeys: Boolean = true): DataFrame = {
     val touchedKeys = upserts.select(pkCols.map(col): _*)
       .unionByName(deleteKeys.select(pkCols.map(col): _*)).distinct()
-    base.join(if (broadcastKeys) broadcast(touchedKeys) else touchedKeys,
+    Merge.joinKeys(base, if (broadcastKeys) broadcast(touchedKeys) else touchedKeys,
       pkCols, "left_semi")
   }
 }

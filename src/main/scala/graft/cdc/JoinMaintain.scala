@@ -115,6 +115,8 @@ object JoinMaintain {
                broadcastKeys: Boolean = true,
                outer: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
     val bc = (df: DataFrame) => if (broadcastKeys) broadcast(df) else df
+    // fact keys match null-safely (Merge.joinKeys), as the fact
+    // replica's merge does: a NULL-pk row it replaces leaves the view
     val touchedFactPks = factUpserts.select(factPk.map(col): _*)
       .unionByName(factDelKeys.select(factPk.map(col): _*)).distinct()
     val touchedDimKeys = dimUpserts.select(col(dimPk))
@@ -133,8 +135,7 @@ object JoinMaintain {
       .unionByName(dimUpserts.select((dimPk +: dimPayload).map(col): _*))
 
     // untouched view rows pass through by reference
-    val kept = view
-      .join(bc(touchedFactPks), factPk, "left_anti")
+    val kept = Merge.joinKeys(view, bc(touchedFactPks), factPk, "left_anti")
       .join(bc(touchedDimKeys.select(col(dimPk).as(fk))), Seq(fk), "left_anti")
 
     // changed fact rows re-derive against the post dim; in OUTER mode
@@ -157,8 +158,7 @@ object JoinMaintain {
     // image, deleted keys' rows fall to NULL payload via the left join
     val dimNew = dimUpserts.select((dimPk +: dimPayload).map(col): _*)
     val fromDim = if (outer) {
-      val src = view
-        .join(bc(touchedFactPks), factPk, "left_anti")
+      val src = Merge.joinKeys(view, bc(touchedFactPks), factPk, "left_anti")
         .join(bc(touchedDimKeys.select(col(dimPk).as(fk))), Seq(fk),
           "left_semi")
         .drop(dimPayload: _*)
@@ -170,8 +170,7 @@ object JoinMaintain {
       src.join(bc(dimRen), src(fk) === col("__jm_dk"), "left")
         .select(src.columns.map(src(_)) ++
           dimPayload.map(c => col(s"__jm_$c").as(c)): _*)
-    } else factBase
-      .join(bc(touchedFactPks), factPk, "left_anti")
+    } else Merge.joinKeys(factBase, bc(touchedFactPks), factPk, "left_anti")
       .join(bc(dimNew), factBase(fk) === dimNew(dimPk), "inner")
       .select(factBase.columns.map(factBase(_)) ++
         dimPayload.map(dimNew(_)): _*)
@@ -179,12 +178,11 @@ object JoinMaintain {
     val rederived = fromFact.unionByName(fromDim)
     // keys that LEFT the view: touched in the pre-view (by fact pk or
     // via a touched dim key) and not re-derived this cycle
-    val droppedKeys = view
-      .join(bc(touchedFactPks), factPk, "left_semi")
+    val touchedInView = Merge.joinKeys(view, bc(touchedFactPks), factPk, "left_semi")
       .unionByName(view.join(
         bc(touchedDimKeys.select(col(dimPk).as(fk))), Seq(fk), "left_semi"))
       .select(factPk.map(col): _*).distinct()
-      .join(rederived.select(factPk.map(col): _*), factPk, "left_anti")
+    val droppedKeys = Merge.joinKeys(touchedInView, rederived, factPk, "left_anti")
     (kept.unionByName(rederived), rederived, droppedKeys)
   }
 
@@ -285,7 +283,7 @@ object JoinMaintain {
 
     // untouched view rows pass through by reference
     val kept = dims.zip(touchedPerDim).foldLeft(
-        view.join(bc(touchedFactPks), factPk, "left_anti")) {
+        Merge.joinKeys(view, bc(touchedFactPks), factPk, "left_anti")) {
       case (acc, (d, tk)) =>
         acc.join(bc(tk.select(col(d.dimPk).as(d.fk))), Seq(d.fk), "left_anti")
     }
@@ -296,8 +294,8 @@ object JoinMaintain {
     val factCols =
       if (outer) view.columns.filterNot(allPayload.contains).toSeq
       else factBase.columns.toSeq
-    val src = (if (outer) view.drop(allPayload: _*) else factBase)
-      .join(bc(touchedFactPks), factPk, "left_anti")
+    val src = Merge.joinKeys(if (outer) view.drop(allPayload: _*) else factBase,
+      bc(touchedFactPks), factPk, "left_anti")
     val marked = dims.zip(touchedPerDim).zipWithIndex.foldLeft(src) {
       case (acc, ((d, tk), i)) =>
         acc.join(bc(tk.select(col(d.dimPk).as(d.fk))
@@ -325,13 +323,13 @@ object JoinMaintain {
         d.payload.map(c => col(s"__sd${i}_$c").as(c)) }: _*)
 
     // keys that LEFT the view: touched in the pre-view, not re-derived
-    val droppedKeys = dims.zip(touchedPerDim).map { case (d, tk) =>
+    val touchedInView = dims.zip(touchedPerDim).map { case (d, tk) =>
         view.join(bc(tk.select(col(d.dimPk).as(d.fk))), Seq(d.fk), "left_semi")
       }
-      .foldLeft(view.join(bc(touchedFactPks), factPk, "left_semi"))(
+      .foldLeft(Merge.joinKeys(view, bc(touchedFactPks), factPk, "left_semi"))(
         _ unionByName _)
       .select(factPk.map(col): _*).distinct()
-      .join(rederived.select(factPk.map(col): _*), factPk, "left_anti")
+    val droppedKeys = Merge.joinKeys(touchedInView, rederived, factPk, "left_anti")
     (kept.unionByName(rederived), rederived, droppedKeys)
   }
 }

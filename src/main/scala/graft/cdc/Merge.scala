@@ -1,7 +1,8 @@
 package graft.cdc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, IsNotNull}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 
 /** Upsert/apply semantics — the Spark-native form of sslr's
@@ -14,10 +15,9 @@ import org.apache.spark.sql.functions._
   * newest row, rows absent from updates survive unchanged.
   *
   * Scale: one shuffle of each side on the PK. When the target is
-  * parquet bucketed by PK (see Replicator) and the batch's key cannot
-  * be NULL, the base side's shuffle is avoided; the anti join also
-  * benefits from AQE converting to broadcast when the update batch is
-  * small — the common CDC case.
+  * parquet bucketed by PK (see Replicator), the base side's shuffle is
+  * avoided entirely; the anti join also benefits from AQE converting to
+  * broadcast when the update batch is small — the common CDC case.
   */
 object Merge {
 
@@ -28,21 +28,33 @@ object Merge {
   }
 
   /** `base` without the rows whose key a `keys` row holds, matched
-    * null-safely: a NULL key is one row identity. Where `keys` provably
-    * holds no NULL (declared or filtered non-null) `===` is the same
-    * match, and the only one that joins a base bucketed on the key in
-    * place (Spark plans `<=>` on `coalesce(key)`, reshuffling the base).
-    * The keys are aliased: base and batch often share lineage.
+    * null-safely: a NULL key is one row identity. A base partitioned on
+    * the key (a table bucketed on it) keeps the equi-join, which reads
+    * it in place (Spark plans `<=>` on `coalesce(key)` and would
+    * reshuffle it), and matches the keys that hold a NULL, few in a key
+    * column, in a second, broadcast anti-join. Any other base shuffles
+    * on the key either way, so one `<=>` join matches with no extra job.
     */
-  private def withoutKeys(base: DataFrame, keys: DataFrame, pkCols: Seq[String]): DataFrame = {
-    val k = keys.select(pkCols.map(c => col(c).as(s"__key_$c")): _*)
-    val plan = k.queryExecution.optimizedPlan
-    val nonNull = plan.constraints.collect { case IsNotNull(a: Attribute) => a.exprId }
-    val matches = pkCols.zip(plan.output).map { case (c, a) =>
-      val (l, r) = (base(c), k(a.name))
-      if (a.nullable && !nonNull.contains(a.exprId)) l <=> r else l === r
+  private def withoutKeys(base: DataFrame, keys: DataFrame, pkCols: Seq[String]): DataFrame =
+    base.queryExecution.sparkPlan.outputPartitioning match {
+      case HashPartitioning(on, _) if on.forall {
+          case a: Attribute => pkCols.contains(a.name)
+          case _ => false
+        } =>
+        val nullKeys = keys.filter(pkCols.map(col(_).isNull).reduce(_ || _))
+        joinKeys(base.join(keys.select(pkCols.map(col): _*), pkCols, "left_anti"),
+          broadcast(nullKeys), pkCols, "left_anti")
+      case _ => joinKeys(base, keys, pkCols, "left_anti")
     }
-    base.join(k, matches.reduce(_ && _), "left_anti")
+
+  /** `rows` semi- or anti-joined (`how`) with `keys` on `pkCols`,
+    * null-safely (`<=>`): the key match of [[upsert]] and
+    * [[applyDeletes]], for the views that retract what they replace.
+    * The keys are aliased: rows and keys often share lineage.
+    */
+  def joinKeys(rows: DataFrame, keys: DataFrame, pkCols: Seq[String], how: String): DataFrame = {
+    val k = keys.select(pkCols.map(c => col(c).as(s"__key_$c")): _*)
+    rows.join(k, pkCols.map(c => rows(c) <=> k(s"__key_$c")).reduce(_ && _), how)
   }
 
   /** Collapse a change batch to ONE row per PK, keeping the highest

@@ -1030,6 +1030,16 @@ class CdcSpec extends SparkSpec {
       Set((Some(1L), "a"), (None, "N")))
     assert(Merge.applyDeletes(nBase, nUpd, Seq("id")).as[(Option[Long], String)].collect().toSeq ==
       Seq((Some(1L), "a")))
+    // the same on a base bucketed on the key, which the merge reads in place
+    val layout = SchemaSync.layoutFor(
+      Seq(SchemaSync.IndexSpec("t_pkey", primary = true, Seq("id"))), 4).get
+    val store = new CatalogStore(spark, Map("t" -> layout),
+      statePath = s"${tmpDir()}/state", tablePrefix = "mergespec_")
+    store.write("t", nBase)
+    assert(Merge.upsert(store.read("t"), nUpd, Seq("id")).as[(Option[Long], String)]
+      .collect().toSet == Set((Some(1L), "a"), (None, "N")))
+    assert(Merge.applyDeletes(store.read("t"), nUpd, Seq("id")).as[(Option[Long], String)]
+      .collect().toSeq == Seq((Some(1L), "a")))
   }
 
   test("latestByKey collapses a multi-row change batch to the highest version per PK") {

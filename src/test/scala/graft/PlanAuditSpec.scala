@@ -156,8 +156,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import graft.cdc.{CatalogStore, Merge, SchemaSync}
-    import graft.util.Tables
+    import graft.cdc.{CatalogStore, ChangeCapture, Merge, SchemaSync}
+    import graft.util.{Lineage, Tables}
 
     val layout = SchemaSync.layoutFor(
       Seq(SchemaSync.IndexSpec("events_pkey", primary = true, Seq("event_id"))), 8).get
@@ -172,9 +172,17 @@ class PlanAuditSpec extends SparkSpec {
     // so the anti-join must use the base table's own distribution.
     val changes = events.filter(col("event_id") > 900)
       .withColumn("value", col("value") + 1.0)
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    // and the Replicator's own batch: a watermark pull on a non-key
+    // version column of a parquet source, truncated — its key column
+    // reads nullable and nothing filters it non-null
+    val srcPath = java.nio.file.Files.createTempDirectory("audit-src").resolve("events").toString
+    events.withColumn("value", col("value") + 1.0).write.parquet(srcPath)
+    val pulled = Lineage.truncate(ChangeCapture.incrementalPull(
+      spark.read.parquet(srcPath), col("ts").cast("long"), watermark = 0L))
+    for (batch <- Seq(changes, pulled)) withSQLConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      val merged = Merge.upsert(store.read("events"), changes, Seq("event_id"))
+      val merged = Merge.upsert(store.read("events"), batch, Seq("event_id"))
       merged.count()
       def collectAll(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: AdaptiveSparkPlanExec => a +: collectAll(a.executedPlan)

@@ -645,6 +645,38 @@ class StreamingSpec extends SparkSpec {
     assert(gotAgg == truth)
   }
 
+  test("MV maintenance retracts a NULL-pk row's update and delete, as the base merge applies them") {
+    import graft.streaming.AggStream
+    for (nBuckets <- Seq(None, Some(4))) {
+      val dir = tmp()
+      val basePath = s"$dir/base.parquet"; val aggPath = s"$dir/agg.parquet"
+      var truth = Map.empty[Option[Long], (Int, Double)] // pk -> (grp, v)
+      Seq(
+        Seq((Some(1L), 0, 1.0, false), (None, 0, 2.0, false), (Some(2L), 1, 4.0, false)),
+        Seq((None, 1, 8.0, false)),  // the NULL-pk row moves to group 1
+        Seq((None, 0, 0.0, true))    // and is deleted
+      ).zipWithIndex.foreach { case (rows, b) =>
+        AggStream.foldBatch(spark,
+          rows.map { case (pk, g, v, del) => (pk, g, v, b.toLong, del) }
+            .toDF("pk", "grp", "v", "ver", "del"), b.toLong,
+          basePath, aggPath, Seq("pk"), Seq("grp"), "v",
+          versionColumn = Some("ver"), deleteCol = Some("del"), nBuckets = nBuckets)
+        truth = rows.foldLeft(truth) { case (t, (pk, g, v, del)) =>
+          if (del) t - pk else t + (pk -> (g, v)) }
+        val base = spark.read.parquet(basePath).select("pk", "grp", "v")
+          .as[(Option[Long], Int, Double)].collect().toSeq
+        assert(base.sortBy(_.toString) == truth.toSeq.map { case (pk, (g, v)) => (pk, g, v) }
+          .sortBy(_.toString), s"$nBuckets batch $b: base replica diverged")
+        val gotAgg = AggStream.readAgg(spark, aggPath, Seq("grp")).collect()
+          .map(r => r.getInt(0) -> (r.getLong(1), BigDecimal(r.getDecimal(2)))).toMap
+        val want = truth.values.groupBy(_._1).map { case (g, rs) =>
+          g -> (rs.size.toLong, rs.map(r => BigDecimal(r._2).setScale(2)).sum)
+        }
+        assert(gotAgg == want, s"$nBuckets batch $b: aggregate diverged from the base")
+      }
+    }
+  }
+
   test("streaming SCD2 history converges to the batch rebuild") {
     import graft.streaming.Scd2Stream
     import graft.cdc.Scd2
@@ -2291,6 +2323,47 @@ class StreamingSpec extends SparkSpec {
     }
     // the stamp is what made the replays safe: it carries the last id
     assert(JoinStream.readStamp(spark, viewPath).contains(7L))
+  }
+
+  test("join-view maintenance drops a NULL-pk fact row's old image on update and delete") {
+    import graft.streaming.JoinStream
+    import graft.cdc.BucketedLayout
+    for (outer <- Seq(false, true)) {
+      val dir = tmp()
+      val factPath = s"$dir/fact.parquet"; val dimPath = s"$dir/dim.parquet"
+      val viewPath = s"$dir/view.parquet"
+      val dim = Map(1L -> "a", 2L -> "b")
+      var factT = Map.empty[Option[Long], (Long, Double)] // pk -> (fk, v)
+      def fact(pk: Option[Long], fk: Long, v: Double, del: Boolean = false) =
+        ("fact", pk, Option(fk), Option(v), Option.empty[Long], Option.empty[String], del)
+      Seq(
+        dim.toSeq.map { case (dk, p) => ("dim", Option.empty[Long], Option.empty[Long],
+          Option.empty[Double], Option(dk), Option(p), false) } ++
+          Seq(fact(Some(1L), 1L, 1.0), fact(None, 1L, 2.0)),
+        Seq(fact(None, 2L, 3.0)),            // the NULL-pk row re-homes onto dim 2
+        Seq(fact(None, 0L, 0.0, del = true)) // and is deleted
+      ).zipWithIndex.foreach { case (rows, b) =>
+        JoinStream.foldBatch(spark,
+          rows.map { case (side, pk, fk, v, dk, p, del) => (side, pk, fk, v, dk, p, b.toLong, del) }
+            .toDF("side", "pk", "fk", "v", "dk", "payload", "ver", "del"), b.toLong,
+          factPath, dimPath, viewPath, Seq("pk"), "fk", "dk",
+          Seq("pk", "fk", "v"), Seq("dk", "payload"), "ver", "del", nBuckets = 4, outer = outer)
+        rows.foreach { case (side, pk, fk, v, _, _, del) =>
+          if (side == "fact") factT = if (del) factT - pk else factT + (pk -> (fk.get, v.get))
+        }
+        val gotView = JoinStream.readView(spark, viewPath)
+          .select("pk", "fk", "v", "payload")
+          .as[(Option[Long], Long, Double, Option[String])].collect().toSeq
+        val want = factT.toSeq.map { case (pk, (fk, v)) => (pk, fk, v, dim.get(fk)) }
+        assert(gotView.sortBy(_.toString) == want.sortBy(_.toString),
+          s"outer=$outer batch $b: view diverged from recompute")
+        val gotFact = spark.read.parquet(factPath).drop(BucketedLayout.GB)
+          .select("pk", "fk", "v").as[(Option[Long], Long, Double)].collect().toSeq
+        assert(gotFact.sortBy(_.toString) ==
+          factT.toSeq.map { case (pk, (fk, v)) => (pk, fk, v) }.sortBy(_.toString),
+          s"outer=$outer batch $b: fact replica diverged")
+      }
+    }
   }
 
   test("streaming OUTER join-view is self-maintainable: LEFT-JOIN parity under churn with the fact replica WIPED before every fold") {
