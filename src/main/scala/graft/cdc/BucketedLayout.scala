@@ -55,17 +55,24 @@ object BucketedLayout {
   def bucketExpr(pkCols: Seq[String], nBuckets: Int): Column =
     RangeHashDiff.hashBucket(pkCols, nBuckets).cast("int")
 
-  /** Full (re)write: stage the whole table partitioned by bucket, then
-    * swap. One task per bucket (repartition on the layout column) so
-    * each partition holds one well-sized file instead of
-    * tasks×buckets fragments.
+  /** The one staging write of [[writeFull]] and [[overwriteBuckets]]:
+    * `df` partitioned by bucket into `tmp`. The repartition on the
+    * layout column puts every row of a bucket in ONE shuffle partition,
+    * so each bucket directory gets exactly one file. It names no
+    * partition count, so AQE may merge whole small partitions (a small
+    * table is written by one task, not one per bucket) but never splits
+    * one; a large table keeps its parallelism.
     */
+  private def stage(df: DataFrame, pkCols: Seq[String], nBuckets: Int, tmp: String): Unit =
+    df.withColumn(GB, bucketExpr(pkCols, nBuckets))
+      .repartition(col(GB))
+      .write.partitionBy(GB).mode("overwrite").parquet(tmp)
+
+  /** Full (re)write: [[stage]] the whole table, then swap it in whole. */
   def writeFull(spark: SparkSession, df: DataFrame, pkCols: Seq[String],
                 nBuckets: Int, destPath: String): Unit = {
     val tmp = stagingPath(destPath)
-    df.withColumn(GB, bucketExpr(pkCols, nBuckets))
-      .repartition(nBuckets, col(GB))
-      .write.partitionBy(GB).mode("overwrite").parquet(tmp)
+    stage(df, pkCols, nBuckets, tmp)
     // marker lands in staging BEFORE the swap: the published target is
     // never visible without its bucket count
     writeMarker(spark, tmp, nBuckets)
@@ -104,9 +111,7 @@ object BucketedLayout {
     // to tell "complete per-partition swaps" (safe to finish dir by
     // dir) from a writeFull staging (only ever swapped whole)
     val tmp = partitionStagingPath(destPath)
-    df.withColumn(GB, bucketExpr(pkCols, nBuckets))
-      .repartition(col(GB))
-      .write.partitionBy(GB).mode("overwrite").parquet(tmp)
+    stage(df, pkCols, nBuckets, tmp)
     val f = Fs.fs(spark, destPath)
     val staged = f.listStatus(new Path(tmp))
       .filter(_.getPath.getName.startsWith(s"$GB="))
@@ -232,10 +237,13 @@ class BucketedParquetStore(spark: SparkSession, dir: String, val nBuckets: Int)
     * its recorded layout disagrees (or predates the marker). The
     * upsert path self-heals on its own; delete-only cycles go through
     * partial overwrites whose bucket arithmetic silently disagrees
-    * with a stale layout — callers run this first.
+    * with a stale layout — callers run this first. True when it
+    * rewrote the table: a frame read before then lists deleted files.
     */
-  def ensureLayout(table: String, pkCols: Seq[String]): Unit =
-    if (exists(table) &&
-      !BucketedLayout.readBucketCount(spark, path(table)).contains(nBuckets))
-      writeFull(table, read(table), pkCols)
+  def ensureLayout(table: String, pkCols: Seq[String]): Boolean = {
+    val relayout = exists(table) &&
+      !BucketedLayout.readBucketCount(spark, path(table)).contains(nBuckets)
+    if (relayout) writeFull(table, read(table), pkCols)
+    relayout
+  }
 }

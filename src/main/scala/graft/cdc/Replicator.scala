@@ -55,6 +55,12 @@ case class ReplicationConfig(
   * With delete sync on, a [[BucketedParquetStore]] sink's poll is the
   * private `reconcile` (one bucket summary, one overwrite of the flagged
   * buckets from the source) and a flat sink's is `rewriteFlat`.
+  *
+  * Each table's source and target frames are resolved once per cycle,
+  * by validation: every read of the poll (range query, summary, full
+  * copy, merge, rewrite) shares that file listing and footer read. A
+  * target is read afresh only after the cycle itself rewrote it: the
+  * re-layout of a bucketed table, and the count after an upsert.
   */
 class Replicator(spark: SparkSession, cfg: ReplicationConfig,
                  source: TableStore, sink: TableStore) {
@@ -67,7 +73,27 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
 
   val state = new StateStore(spark, sink.statePath)
 
-  private def readSource(t: TableConfig): DataFrame = filtered(t, source.read(t.name))
+  /** A table's unfiltered source and, if the sink has it, its target. */
+  private case class Frames(source: DataFrame, target: Option[DataFrame])
+
+  /** The frames `validateTables` resolved in this cycle; None outside
+    * `run()`, where the hooks read the stores themselves.
+    */
+  @volatile private var cycleFrames: Option[Map[String, Frames]] = None
+
+  private def framesOf(table: String): Option[Frames] = cycleFrames.flatMap(_.get(table))
+
+  private def readSource(t: TableConfig): DataFrame =
+    filtered(t, framesOf(t.name).fold(source.read(t.name))(_.source))
+
+  /** The sink's table as a poll reads it: with the layout column on a bucketed sink. */
+  private def storeTarget(table: String): DataFrame = sink match {
+    case b: BucketedParquetStore => b.readWithBuckets(table)
+    case _ => sink.read(table)
+  }
+
+  private def readTarget(table: String): DataFrame =
+    framesOf(table).flatMap(_.target).getOrElse(storeTarget(table))
 
   private def filtered(t: TableConfig, df: DataFrame): DataFrame =
     t.where.map(w => df.filter(expr(w))).getOrElse(df)
@@ -87,12 +113,13 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
 
   /** Cycle-checked dependency validation (reference job.go:96-160). */
   def validateTables(): Unit = {
-    // schema reads (a listing and a footer read each) are independent
-    // per table: fetch them concurrently, walk the dependencies after
-    val schemas = perTable(cfg.tables.map(_.name)) { name =>
-      name -> (source.read(name).schema,
-        if (sink.exists(name)) Some(sink.read(name).schema) else None)
+    // the frames (a listing and a footer read each) are independent
+    // per table: resolve them concurrently, walk the dependencies after
+    val frames = perTable(cfg.tables.map(_.name)) { name =>
+      name -> Frames(source.read(name),
+        if (sink.exists(name)) Some(storeTarget(name)) else None)
     }.toMap
+    if (cycleState.isDefined) cycleFrames = Some(frames)
     var status = Map.empty[String, String] // unknown -> validating -> valid
     def validate(name: String): Unit = {
       if (status.get(name).contains("valid")) return
@@ -103,8 +130,11 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
         .getOrElse(throw new IllegalArgumentException(s"unknown table $name"))
       t.uses.foreach(validate)
 
-      val (srcSchema, tgtSchema) = schemas(name)
-      SchemaSync.decide(SchemaSync.compare(name, srcSchema, tgtSchema),
+      val tgtSchema = frames(name).target.map(df => sink match {
+        case _: BucketedParquetStore => df.drop(BucketedLayout.GB).schema
+        case _ => df.schema
+      })
+      SchemaSync.decide(SchemaSync.compare(name, frames(name).source.schema, tgtSchema),
           cfg.resyncOnSchemaChange) match {
         case SchemaSync.Abort =>
           throw new IllegalStateException(s"schema mismatch for table $name")
@@ -163,7 +193,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
       // I/O; the recorded number is exact because this job is the
       // target's only writer (checkpoint single-writer rule)
       val tgtCount =
-        if (st.targetRows >= 0) st.targetRows else sink.read(t.name).count()
+        if (st.targetRows >= 0) st.targetRows else readTarget(t.name).count()
       tgtCount < srcCount * cfg.fullCopyThreshold
     }
 
@@ -194,11 +224,12 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
             b.upsert(t.name, changes, t.primaryKeys)
           case _ =>
             sink.write(t.name,
-              Merge.upsert(sink.read(t.name), changes, t.primaryKeys)
+              Merge.upsert(readTarget(t.name), changes, t.primaryKeys)
                 .repartition(chunkParts(srcCount), t.primaryKeys.map(col): _*))
         }
         // one post-write metadata count per ACTUAL write (idle cycles
-        // never touch the target at all)
+        // never touch the target at all), read afresh: the write
+        // replaced the files the cycle's frame lists
         state.setProgress(t.name, maxVersion, sink.read(t.name).count())
       } else state.setVersion(t.name, maxVersion)
     }
@@ -270,11 +301,13 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
   private def reconcile(t: TableConfig, b: BucketedParquetStore,
                         tracked: Option[state.TableState]): Unit = {
     // the summary assumes summary buckets == storage partitions: align
-    // a stale or changed layout first (readWithBuckets then heals an
-    // interrupted swap before the scan)
-    b.ensureLayout(t.name, t.primaryKeys)
+    // a stale or changed layout first. A re-layout deleted the files
+    // the validated frame lists, so the target is then read afresh
+    // (readWithBuckets heals an interrupted swap before the listing)
+    val tgt = if (b.ensureLayout(t.name, t.primaryKeys)) b.readWithBuckets(t.name)
+      else readTarget(t.name)
     val src = readSource(t)
-    val summary = RangeHashDiff.bucketSummary(src, b.readWithBuckets(t.name), t.primaryKeys,
+    val summary = RangeHashDiff.bucketSummary(src, tgt, t.primaryKeys,
       RangeHashDiff.hashBucket(t.primaryKeys, b.nBuckets), col(BucketedLayout.GB),
       tracked.map(st => col(t.versionColumn) -> st.lastSeenVersion)).collect()
     val srcCount = total(summary, "src_keys")
@@ -326,7 +359,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
         coalesce(RangeHashDiff.rangeBucket(pks.head, cfg.deleteChunkSize), lit(Long.MinValue))
       case _ => RangeHashDiff.hashBucket(pks, math.max(1, (cfg.deleteChunkSize / 16).toInt))
     }
-    val tgt = sink.read(t.name)
+    val tgt = readTarget(t.name)
     val pulled = batch.filterNot(_.isEmpty)
     val upserted = pulled.fold(tgt)(Merge.upsert(tgt, _, pks))
     val summary = RangeHashDiff.bucketSummary(src, upserted, pks, bucket, bucket).collect()
@@ -353,8 +386,9 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
     case _ => rewriteFlat(t, readSource(t), batch = None).foreach(state.setTargetRows(t.name, _))
   }
 
-  /** One full sync cycle over the state log read ONCE: validate, then
-    * one poll per table (`syncDeletes` alone when updates are off).
+  /** One full sync cycle over the state log read ONCE: validate (which
+    * resolves each table's frames once), then one poll per table
+    * (`syncDeletes` alone when updates are off).
     * Tables sync CONCURRENTLY (they touch disjoint paths and the
     * StateStore serializes its own writes) — the reference is
     * sequential only because it owns a single database connection; a
@@ -370,6 +404,7 @@ class Replicator(spark: SparkSession, cfg: ReplicationConfig,
       }
     } finally {
       cycleState = None
+      cycleFrames = None
       forceSync = Set.empty
     }
   }

@@ -176,6 +176,35 @@ class CdcSpec extends SparkSpec {
     }
   }
 
+  test("bucketed layout: full and partial writes stage one file per bucket in at most shuffle-partitions tasks") {
+    val tgt = s"${tmpDir()}/t.parquet"
+    val pk = Seq("id")
+    // four input partitions: a write without the bucket repartition
+    // would leave up to four files in a bucket directory
+    val rows = spark.range(0, 2000, 1, 4).select($"id", ($"id" % 13).as("x")).cache()
+    val maxTasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nBuckets = 2 * maxTasks
+    def dataFiles(k: Int): Int = Option(new java.io.File(tgt, s"${BucketedLayout.GB}=$k")
+      .listFiles()).fold(0)(_.count(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")))
+
+    val full = sparkWorkOf(BucketedLayout.writeFull(spark, rows, pk, nBuckets, tgt))
+    assert((0 until nBuckets).map(dataFiles) == Seq.fill(nBuckets)(1), "writeFull: files per bucket")
+    assert(full.stageTasks.nonEmpty && full.stageTasks.max <= maxTasks,
+      s"writeFull ran stages of ${full.stageTasks} tasks")
+
+    val touched = Seq(1, 3, 5)
+    val gb = BucketedLayout.bucketExpr(pk, nBuckets)
+    val partial = sparkWorkOf(BucketedLayout.overwriteBuckets(spark,
+      rows.filter(gb.isin(touched: _*)).withColumn("x", lit(-1L)), pk, nBuckets, tgt))
+    assert((0 until nBuckets).map(dataFiles) == Seq.fill(nBuckets)(1), "overwriteBuckets: files per bucket")
+    assert(partial.stageTasks.nonEmpty && partial.stageTasks.max <= maxTasks,
+      s"overwriteBuckets ran stages of ${partial.stageTasks} tasks")
+    val out = spark.read.parquet(tgt)
+    assert(out.count() == 2000L)
+    assert(out.filter($"x" === -1L).select(col(BucketedLayout.GB)).distinct()
+      .as[Int].collect().toSet == touched.toSet)
+  }
+
   test("bucketed sink: delete-only cycle under a changed bucket count converges") {
     val srcDir = tmpDir(); val tgtDir = tmpDir()
     val events = Tables.events(spark, sfDir).cache()
@@ -196,6 +225,32 @@ class CdcSpec extends SparkSpec {
     assert(tgt.select("event_id").distinct().count() == evolved.count(), "no dup PKs")
     assert(tgt.join(evolved, Seq("event_id"), "left_anti").count() == 0)
     assert(BucketedLayout.readBucketCount(spark, s"$tgtDir/events.parquet").contains(4))
+  }
+
+  test("bucketed sink: updates, inserts and deletes in one cycle under a changed bucket count converge") {
+    // the re-layout cycle's reconcile also takes the watermark term: the
+    // summary must read the target as the re-layout left it, not the
+    // frame validation resolved before it (whose files are deleted)
+    val srcDir = tmpDir(); val tgtDir = tmpDir()
+    val base = versioned(400).cache()
+    base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir),
+      new BucketedParquetStore(spark, tgtDir, 8)).run()
+
+    val evolved = base.filter($"id" % 7 =!= 0)
+      .withColumn("ver", when($"id" % 5 === 0, $"ver" + 1000L).otherwise($"ver"))
+      .withColumn("v", when($"id" % 5 === 0, lit("updated")).otherwise($"v"))
+      .unionByName(versioned(20).select(($"id" + 400L).as("id"), ($"ver" + 2000L).as("ver"), $"v"))
+      .cache()
+    evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+    val sink4 = new BucketedParquetStore(spark, tgtDir, 4)
+    val rep = new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), sink4)
+    rep.run()
+
+    assertConverged(sink4.read("t"), evolved)
+    assert(BucketedLayout.readBucketCount(spark, s"$tgtDir/t.parquet").contains(4))
+    val st = rep.state.get("t")
+    assert(st.lastSeenVersion == 2019L && st.targetRows == evolved.count())
   }
 
   test("bucketed sink: partition-pruned read only touches the filtered bucket dirs") {
@@ -912,15 +967,31 @@ class CdcSpec extends SparkSpec {
     assert(store.get("t2") == store.TableState(7L, where))
   }
 
-  /** Number of Spark jobs `f` starts on this thread. */
-  private def jobsStartedBy(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Spark work `f` starts on this thread and the threads it creates:
+    * its jobs, those of them that run outside any SQL query (the
+    * footer read that resolves a parquet frame) and the task count of
+    * every stage that ran.
+    */
+  private case class SparkWork(jobs: Int, footerJobs: Int, stageTasks: Seq[Int])
+
+  private def sparkWorkOf(f: => Unit): SparkWork = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // (job group, outside any SQL query) per started job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val probeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          jobs.add(g -> props.forall(_.getProperty("spark.sql.execution.id") == null))
+          if (g == "probe") e.stageIds.foreach(id => probeStages.add(id))
+        }
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (probeStages.contains(e.stageInfo.stageId)) stageTasks.add(e.stageInfo.numTasks)
     }
     sc.addSparkListener(listener)
     try {
@@ -930,11 +1001,13 @@ class CdcSpec extends SparkSpec {
       // marker job is seen, every job `f` started has been too
       sc.setJobGroup("marker", "marker", interruptOnCancel = false)
       sc.parallelize(0 until 1, 1).count()
+      def markerSeen = jobs.asScala.exists(_._1 == "marker")
       val deadline = System.nanoTime() + 10_000_000_000L
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs.contains("marker"))
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(markerSeen)
     } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    jobs.toArray.count(_ == "probe")
+    val probe = jobs.asScala.toSeq.collect { case ("probe", outsideSql) => outsideSql }
+    SparkWork(probe.size, probe.count(identity), stageTasks.asScala.toSeq.map(_.toInt))
   }
 
   test("state store: reads and compaction start no Spark job") {
@@ -943,14 +1016,42 @@ class CdcSpec extends SparkSpec {
     (1 to 64).foreach(i => store.setVersion(s"t${i % 4}", i.toLong))
     def logs() = new java.io.File(dir).list().count(_.endsWith(".json"))
     assert(logs() == 64)
-    val started = jobsStartedBy {
+    val started = sparkWorkOf {
       assert(store.all().size == 4)
       assert(store.get("t1").lastSeenVersion == 61L)
       store.setTargetRows("t1", 10L) // the 65th file: compacts the log
-    }
+    }.jobs
     assert(logs() == 1, "the append must have compacted the log")
     assert(store.get("t1") == store.TableState(61L, "", 10L))
     assert(started == 0, s"$started Spark jobs")
+  }
+
+  /** Spark jobs of a change poll and of an idle poll of one table, per
+    * sink kind; resolving the source or the target a second time adds
+    * a footer job to either.
+    */
+  private val pollJobs = Map("bucketed sink" -> (6, 4), "flat sink" -> (12, 7))
+
+  for ((kind, mkSink) <- sinkKinds) {
+    test(s"$kind: a cycle resolves each table's source and target once") {
+      val srcDir = tmpDir(); val tgtDir = tmpDir()
+      val base = versioned(300).cache()
+      base.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val rep = new Replicator(spark, versionedCfg(), new ParquetStore(spark, srcDir), mkSink(tgtDir))
+      rep.run()
+      val evolved = base.filter($"id" % 9 =!= 4)
+        .withColumn("ver", when($"id" % 10 === 0, $"ver" + 500L).otherwise($"ver"))
+        .unionByName(versioned(5).select(($"id" + 300L).as("id"), ($"ver" + 600L).as("ver"), $"v"))
+        .cache()
+      evolved.write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val change = sparkWorkOf(rep.run())
+      assertConverged(mkSink(tgtDir).read("t"), evolved)
+      val idle = sparkWorkOf(rep.run())
+      assertConverged(mkSink(tgtDir).read("t"), evolved)
+      // one footer job for the source, one for the target
+      assert(change.footerJobs == 2 && idle.footerJobs == 2, s"change $change, idle $idle")
+      assert((change.jobs, idle.jobs) == pollJobs(kind), s"change $change, idle $idle")
+    }
   }
 
   test("state store: a compacted multi-record log file reads back") {
